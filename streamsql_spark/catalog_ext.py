@@ -599,20 +599,6 @@ def _lang_score_oracle(lang_words: tuple[str, ...]) -> str:
             f" / greatest(len(string_split(lower(text), ' ')), 1), 6)")
 
 
-def _langid_oracle() -> str:
-    from .operators.text import LANG_PROFILES
-    structs = ", ".join(
-        f"{{'score': {_lang_score_oracle(sw)}, 'lang': '{lang}'}}"
-        for lang, sw in LANG_PROFILES.items())
-    return f"""
-    SELECT doc_id,
-           CASE WHEN list_max([{structs}]).score > 0
-                THEN list_max([{structs}]).lang ELSE 'und' END AS lang_pred,
-           list_max([{structs}]).score AS lang_score
-    FROM documents
-    """
-
-
 def _text_analysis_oracle() -> str:
     from .operators.text import LANG_PROFILES
     structs = ", ".join(

@@ -20,7 +20,7 @@ from __future__ import annotations
 from itertools import permutations
 
 from ..dialect import nodes as N
-from .eval import MatchContext, NavOffsetCapError, evaluate
+from .program import MatchView, Program
 
 
 class CepError(ValueError):
@@ -207,116 +207,18 @@ def _len_bounds(pat) -> tuple[int, int | None]:
     return (0, None)  # unknown node: conservative
 
 
-def _max_next_offset(exprs, floor: int = 1, fname: str = "next") -> int:
-    """Largest literal ``fname``() navigation offset in ``exprs``
-    (each call defaults to 1; non-literal offsets conservatively count
-    as 1).  ``floor`` is the result when no such call appears — 1 for
-    the DEFINE span (a span of at least one is assumed by callers
-    gated on _uses_future_nav), 0 for the MEASURES probe.  Pass
-    ``fname="prev"`` for the backward span (the streaming kernel's
-    consumed-row context retention, r12)."""
-    import dataclasses
-
-    best = floor
-
-    def walk(x):
-        nonlocal best
-        if isinstance(x, N.Func) and str(x.name).lower() == fname:
-            n = 1
-            if len(x.args) > 1 and isinstance(x.args[1], N.Lit) \
-                    and isinstance(x.args[1].value, int):
-                n = max(1, int(x.args[1].value))
-            best = max(best, n)
-        if dataclasses.is_dataclass(x) and not isinstance(x, type):
-            for f in dataclasses.fields(x):
-                walk(getattr(x, f.name))
-        elif isinstance(x, (list, tuple)):
-            for v in x:
-                walk(v)
-        elif isinstance(x, dict):
-            for v in x.values():
-                walk(v)
-
-    for e in exprs:
-        walk(e)
-    return best
-
-
-def nonliteral_nav_offset(exprs, fnames=("prev", "next")) -> str | None:
-    """The name of the first call among ``fnames`` in ``exprs`` whose
-    offset argument is not an integer literal, else None.  The batch
-    and flush paths evaluate dynamic offsets per row (eval.py), but
-    the STREAMING kernel sizes its consumed-row context and tail-hold
-    spans from the maximum literal offset — a dynamic offset would
-    silently under-retain and diverge across micro-batch splits
-    (review find r12), so the kernel refuses it typed unless the query
-    declares a retention cap with the MAXNAVOFFSET option (r13)."""
-    import dataclasses
-
-    bad: list[str] = []
-
-    def walk(x):
-        if bad:
-            return
-        if isinstance(x, N.Func) and str(x.name).lower() in fnames:
-            if len(x.args) > 1 and not (
-                    isinstance(x.args[1], N.Lit)
-                    and isinstance(x.args[1].value, int)):
-                bad.append(str(x.name).upper())
-        if dataclasses.is_dataclass(x) and not isinstance(x, type):
-            for f in dataclasses.fields(x):
-                walk(getattr(x, f.name))
-        elif isinstance(x, (list, tuple)):
-            for v in x:
-                walk(v)
-        elif isinstance(x, dict):
-            for v in x.values():
-                walk(v)
-
-    for e in exprs:
-        walk(e)
-    return bad[0] if bad else None
-
-
-def _uses_future_nav(spec: N.MatchSpec) -> bool:
-    """True if any DEFINE or MEASURE references NEXT() — the result
-    then depends on rows after the current one, so even a fixed-length
-    match touching the buffer tail is not final."""
-    import dataclasses
-
-    def walk(x) -> bool:
-        if isinstance(x, N.Func) and str(x.name).lower() == "next":
-            return True
-        if dataclasses.is_dataclass(x) and not isinstance(x, type):
-            return any(walk(getattr(x, f.name))
-                       for f in dataclasses.fields(x))
-        if isinstance(x, (list, tuple)):
-            return any(walk(v) for v in x)
-        if isinstance(x, dict):
-            return any(walk(v) for v in x.values())
-        return False
-
-    # MEASURES NEXT(...) also reads past the match tail: a streaming
-    # release at the buffer edge would emit NULL where the batch kernel
-    # (which has the following row) fills the real value
-    return any(walk(e) for e in spec.defines.values()) \
-        or any(walk(m) for m in spec.measures)
-
-
 class Matcher:
     def __init__(self, spec: N.MatchSpec, rows: list[dict],
                  ts_values: list | None = None, within: float | None = None,
-                 pre_cls: dict | None = None, nav_cap: int | None = None):
+                 pre_cls: dict | None = None, program: Program | None = None):
         self.spec = spec
         self.rows = rows
         self.ts = ts_values
         self.within = within
-        # streaming MAXNAVOFFSET: dynamic PREV/NEXT offsets are allowed
-        # up to this cap — spans below inflate to it so tail-holds and
-        # context retention cover any legal runtime offset
-        self.nav_cap = nav_cap
-        self.defines = spec.defines
-        self.subsets = spec.subsets
+        # the statement's compiled DEFINE/MEASURES (built once per
+        # statement by the kernels; compiled here for direct use)
+        self.program = program or Program(spec)
+        self.view = MatchView(rows)
         self.pattern = _expand_subsets(spec.pattern, spec.subsets) \
             if spec.pattern is not None else None
         self.match_number = 0
@@ -331,47 +233,7 @@ class Matcher:
         # micro-batch.
         lo, hi = _len_bounds(self.pattern)
         self.fixed_final = (hi is not None and lo == hi
-                            and not _uses_future_nav(spec))
-        # the pattern's full symbol alphabet — X.col in MEASURES/DEFINE
-        # resolves against it even when X bound zero rows
-        syms: set = set(self.defines or ())
-        for k, members in (self.subsets or {}).items():
-            syms.add(k)
-            syms.update(members)
-
-        def walk(p):
-            if p is None:
-                return
-            if isinstance(p, N.PSym):
-                syms.add(p.name)
-            for c in getattr(p, "items", []) or []:
-                walk(c)
-            item = getattr(p, "item", None)
-            if item is not None:
-                walk(item)
-        walk(self.pattern)
-        self.symbols = frozenset(syms)
-        # NEXT() in DEFINE reads rows AFTER the one being classified: a
-        # failed classification within the SYMBOL's NEXT span of the
-        # buffer tail is INCONCLUSIVE for streaming (a future row could
-        # flip it), so it must hold the position, not consume it.
-        # Per-symbol (r12): a span keyed off ANY define's NEXT made
-        # every tail failure inconclusive — e.g. an A-define without
-        # navigation failing on an end-of-stream closer row held
-        # forever because a C-define elsewhere used NEXT.
-        def _span(exprs) -> int:
-            s = _max_next_offset(exprs, floor=0)
-            if nav_cap is not None and \
-                    nonliteral_nav_offset(exprs, ("next",)) is not None:
-                s = max(s, nav_cap)
-            return s
-
-        self._next_span_by_sym = {
-            s: _span([c]) for s, c in (spec.defines or {}).items()}
-        # NEXT() in MEASURES reads rows after the MATCH: a completed
-        # match whose measures may reach past the buffer tail must hold
-        # for the next micro-batch (0 = no NEXT in any measure)
-        self._measures_next = _span(spec.measures)
+                            and not self.program.future_nav)
 
     # ------------------------------------------------------ classification
     def classify(self, pos: int, sym: str, bindings: list) -> bool:
@@ -384,20 +246,14 @@ class Matcher:
         arr = self.pre_cls.get(sym)
         if arr is not None:
             return bool(arr[pos])
-        cond = self.defines.get(sym)
-        if cond is None:
+        pred = self.program.defines.get(sym)
+        if pred is None:
             return True  # undefined symbol ≡ TRUE (engine.go:463-478)
-        ctx = MatchContext(self.rows, bindings, pos=pos, current_symbol=sym,
-                           match_number=self.match_number + 1,
-                           subsets=self.subsets, symbols=self.symbols,
-                           nav_cap=self.nav_cap)
-        try:
-            ok = bool(evaluate(cond, ctx))
-        except NavOffsetCapError:
-            raise  # typed cap breach must not read as "no match"
-        except Exception:
-            ok = False
-        span = self._next_span_by_sym.get(sym, 0)
+        v = self.view
+        v.bind, v.pos, v.sym = bindings, pos, sym
+        v.mn = self.match_number + 1
+        ok = pred(v) is True
+        span = self.program.next_span.get(sym, 0)
         if not ok and span and pos + span >= len(self.rows):
             # THIS symbol's DEFINE uses NEXT() and the row is within
             # its span of the buffer tail: the False may come from
@@ -502,7 +358,7 @@ class Matcher:
             return first_idx + 1
         if skip[0] in ("to_first", "to_last"):
             sym = skip[1]
-            members = set(self.subsets.get(sym, {sym}))
+            members = self.program.members(sym)
             sym_rows = [i for i, s in bindings if s in members]
             if not sym_rows:
                 return last_idx + 1
@@ -545,13 +401,13 @@ class Matcher:
         arr = self.pre_cls.get(sym)
         if arr is not None:
             return arr
-        if sym not in self.defines:
+        if sym not in self.spec.defines:
             import numpy as np
 
             return np.ones(n, dtype=bool)
         return None
 
-    def _find_all_fast(self, max_matches: int):
+    def _find_all_fast(self):
         """Closed-form drive for the dominant pattern shapes:
 
         - ``A{m,}[{,M}]`` greedy under SKIP PAST LAST ROW, no WITHIN →
@@ -596,7 +452,7 @@ class Matcher:
             ends = np.concatenate((idx[brk], [idx[-1]]))
             qmin, qmax = pat.min, pat.max
             for s, e in zip(starts.tolist(), ends.tolist()):
-                while s <= e and len(out) < max_matches:
+                while s <= e:
                     ln = e - s + 1
                     if ln < qmin:
                         break
@@ -648,12 +504,14 @@ class Matcher:
         cand = np.flatnonzero(any_mask)
         out = []
         ci = 0
-        while ci < len(cand) and len(out) < max_matches:
+        while ci < len(cand):
             i = int(cand[ci])
             for q, m in zip(seqs, masks):
                 if m is not None and i < len(m) and m[i]:
                     bindings = [(i + j, q[j]) for j in range(len(q))]
                     break
+            else:
+                raise CepError(f"candidate row {i} has no sequence mask")
             self.match_number += 1
             out.append(bindings)
             # _skip_to always advances past the match start; max() is a
@@ -662,38 +520,27 @@ class Matcher:
                                      max(self._skip_to(bindings), i + 1)))
         return out
 
-    def find_all(self, max_matches: int = 100000):
+    def find_all(self):
         """All matches per AFTER MATCH SKIP policy, leftmost-first."""
-        fast = self._find_all_fast(max_matches)
+        fast = self._find_all_fast()
         if fast is not None:
             return fast
-        out = []
-        n = len(self.rows)
-        cand = self._start_candidates()
-        if cand is not None:
-            import numpy as np
+        import numpy as np
 
-            ci = 0
-            while ci < len(cand) and len(out) < max_matches:
-                m = self.first_match(int(cand[ci]))
-                if m is None:
-                    ci += 1
-                    continue
-                _, bindings = m
-                self.match_number += 1
-                out.append(bindings)
-                ci = int(np.searchsorted(cand, self._skip_to(bindings)))
-            return out
-        start = 0
-        while start < n and len(out) < max_matches:
-            m = self.first_match(start)
+        cand = self._start_candidates()
+        if cand is None:
+            cand = np.arange(len(self.rows))
+        out = []
+        ci = 0
+        while ci < len(cand):
+            m = self.first_match(int(cand[ci]))
             if m is None:
-                start += 1
+                ci += 1
                 continue
             _, bindings = m
             self.match_number += 1
             out.append(bindings)
-            start = self._skip_to(bindings)
+            ci = int(np.searchsorted(cand, self._skip_to(bindings)))
         return out
 
     def _expired(self, start: int) -> bool:
@@ -747,8 +594,8 @@ class Matcher:
                 return out, start
             # rows the emission may read: the match itself (through
             # end-1) plus any MEASURES NEXT() reach past its last row
-            tail_need = end + self._measures_next - 1 \
-                if self._measures_next else end
+            tail_need = end + self.program.measures_next - 1 \
+                if self.program.measures_next else end
             tail_need = max(tail_need, end)
             if tail_need >= n and not flush and not self._expired(start) \
                     and not self.fixed_final:
@@ -765,41 +612,32 @@ class Matcher:
 
     # ----------------------------------------------------------- measures
     def measure_rows(self, bindings: list, match_no: int) -> list[dict]:
-        """Emit measure row(s) for a completed match."""
-        spec = self.spec
+        """Emit measure row(s) for a completed match (ALL ROWS exposes
+        the input columns alongside MEASURES, cep_test.go
+        TestCEP_AllRowsSelectStarIncludesInput)."""
+        v = self.view
+        v.bind, v.mn, v.sym = bindings, match_no, None
+        measures = self.program.measures
+        if self.spec.rows_per_match != "all":
+            v.pos = None  # FINAL: the whole match
+            return [{a: fn(v) for a, fn in measures}]
         outs = []
-        if spec.rows_per_match == "all":
-            # ALL ROWS exposes the input columns alongside MEASURES
-            # (cep_test.go TestCEP_AllRowsSelectStarIncludesInput)
-            positions = [i for i, _ in bindings]
-            for p in positions:
-                ctx = MatchContext(self.rows, bindings, pos=p,
-                                   match_number=match_no,
-                                   subsets=self.subsets,
-                                   symbols=self.symbols,
-                                   nav_cap=self.nav_cap)
-                out = dict(self.rows[p])
-                out.update({m.alias or f"m{j}": evaluate(m.expr, ctx)
-                            for j, m in enumerate(spec.measures)})
-                outs.append(out)
-        else:
-            ctx = MatchContext(self.rows, bindings, pos=None,
-                               match_number=match_no, subsets=self.subsets,
-                               symbols=self.symbols, nav_cap=self.nav_cap)
-            outs.append({m.alias or f"m{j}": evaluate(m.expr, ctx)
-                         for j, m in enumerate(spec.measures)})
+        for p, _ in bindings:  # each row with its RUNNING measures
+            v.pos = p
+            outs.append({**self.rows[p], **{a: fn(v) for a, fn in measures}})
         return outs
 
 
 def run_partition(spec: N.MatchSpec, rows: list[dict],
                   ts_values: list | None, within: float | None,
-                  pre_cls: dict | None = None) -> list[dict]:
+                  pre_cls: dict | None = None,
+                  program: Program | None = None) -> list[dict]:
     """Match one ordered partition; returns measure rows."""
     if spec.pattern is None:
         raise CepError("MATCH_RECOGNIZE requires PATTERN")
-    matcher = Matcher(spec, rows, ts_values, within, pre_cls=pre_cls)
+    matcher = Matcher(spec, rows, ts_values, within, pre_cls=pre_cls,
+                      program=program)
     out = []
-    matcher.match_number = 0
     for no, bindings in enumerate(matcher.find_all(), start=1):
         out.extend(matcher.measure_rows(bindings, no))
     return out

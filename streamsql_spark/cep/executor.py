@@ -25,6 +25,7 @@ from ..dialect.render import render
 from ..engine.batch import duration_to_seconds
 from ..plans.plan import TIMEUNIT_PER_SECOND
 from .engine import run_partition
+from .program import Program, alphabet
 
 # batch-kernel buffer flush threshold (rows): the pandas buffer drains at
 # the next key boundary past this, bounding Python memory per task — the
@@ -35,14 +36,14 @@ _TASK_CHUNK_ROWS = 65_536
 class _LazyRows:
     """List-of-dicts façade over a pandas frame for the match kernel.
 
-    The matcher and measure evaluator touch only bound/navigated rows
+    The matcher and the compiled program touch only bound/navigated rows
     (with vectorized DEFINEs, a tiny fraction of the partition), so the
     per-row dict — and even the per-COLUMN python-object conversion —
     is deferred until first touch and cached (guide §4: the eager
     ``to_dict("records")`` + NaN fix-up was O(rows × cols) Python work
     per task regardless of match count).  Supports ``len``, integer
     indexing and contiguous slicing — the full access surface of
-    ``Matcher``/``MatchContext``.  Slices share the column cache and the
+    ``Matcher``/``MatchView``.  Slices share the column cache and the
     absolute-index row cache with their parent.
     """
 
@@ -66,7 +67,7 @@ class _LazyRows:
             col = self._pdf[name]
             vals = col.tolist()
             # NaN/NaT -> None: raw pandas NaN breaks SQL NULL semantics
-            # in the interpreted evaluator (nan > 5 is False where SQL
+            # in the compiled program (nan > 5 is False where SQL
             # says UNKNOWN; nan passes `is not None` and poisons
             # SUM/AVG measures)
             na = col.isna().to_numpy()
@@ -111,7 +112,9 @@ def _descend_type(dt: DataType, segs: list) -> DataType:
     return dt
 
 
-def _measure_type(e: N.Expr, schema: dict[str, DataType]) -> DataType:
+def _measure_type(e: N.Expr, schema: dict[str, DataType]) -> DataType | None:
+    """Type of a measure LEAF (literal, column, navigation, aggregate,
+    CLASSIFIER, MATCH_NUMBER); None for any other node."""
     if isinstance(e, N.Lit):
         if isinstance(e.value, bool):
             return BooleanType()
@@ -133,39 +136,58 @@ def _measure_type(e: N.Expr, schema: dict[str, DataType]) -> DataType:
             if segs[i] in schema:
                 return _descend_type(schema[segs[i]], segs[i + 1:])
         return DoubleType()
-    if isinstance(e, N.Func):
-        name = e.name.lower()
-        if name in ("__final__", "__running__"):
-            return _measure_type(e.args[0], schema)
-        if name in ("count", "match_number"):
-            return LongType()
-        if name == "classifier":
-            return StringType()
-        if name in ("avg", "sum", "round", "sqrt", "power", "pow"):
-            return DoubleType()
-        if name in ("min", "max", "first", "last", "prev", "next", "coalesce") and e.args:
-            return _measure_type(e.args[0], schema)
-        if name in ("upper", "lower", "concat"):
-            return StringType()
-        if name == "length":
-            return LongType()
-        return DoubleType()
-    if isinstance(e, N.Bin):
-        if e.op in ("=", "!=", "<", "<=", ">", ">=", "AND", "OR"):
-            return BooleanType()
-        if e.op == "||":
-            return StringType()
-        lt, rt = _measure_type(e.left, schema), _measure_type(e.right, schema)
-        if e.op == "/" or isinstance(lt, DoubleType) or isinstance(rt, DoubleType):
-            return DoubleType()
+    if not isinstance(e, N.Func):
+        return None
+    name = e.name.lower()
+    if name in ("__final__", "__running__"):
+        return _measure_type(e.args[0], schema)
+    if name in ("count", "match_number"):
         return LongType()
-    if isinstance(e, (N.IsNull, N.InList, N.Between)):
-        return BooleanType()
-    if isinstance(e, N.Un):
-        return BooleanType() if e.op == "NOT" else _measure_type(e.operand, schema)
-    if isinstance(e, N.Case) and e.whens:
-        return _measure_type(e.whens[0][1], schema)
-    return StringType()
+    if name == "classifier":
+        return StringType()
+    if name in ("avg", "sum"):
+        return DoubleType()
+    if name in ("min", "max", "first", "last", "prev", "next") and e.args:
+        return _measure_type(e.args[0], schema)
+    return None
+
+
+def _measure_types(exprs: list, schema: dict[str, DataType],
+                   spark: SparkSession) -> list[DataType]:
+    """Output types of MEASURES: a leaf types directly; any other
+    expression is typed by Catalyst with its leaves as typed columns —
+    the type the SELECT path gives the same expression, with no
+    second typing table to drift from the functions it covers."""
+    leaves: list[DataType] = []
+
+    def pre(n):
+        if isinstance(n, N.Func) and n.name.lower() in ("__final__",
+                                                         "__running__"):
+            return N.transform(n.args[0], lambda x: x, pre=pre)
+        if not isinstance(n, N.Lit):
+            t = _measure_type(n, schema)
+        elif isinstance(n.value, float):
+            # Spark SQL reads `1.5` as DECIMAL; the program computes
+            # it as a double, so the probe must type it that way
+            t = DoubleType()
+        else:
+            t = None  # other literals stay foldable (round's scale)
+        if t is None:
+            return None
+        leaves.append(t)
+        return N.Col((f"__leaf{len(leaves) - 1}__",))
+
+    out: list = [_measure_type(e, schema) for e in exprs]
+    composite = {j: render(N.transform(e, lambda x: x, pre=pre))
+                 for j, e in enumerate(exprs) if out[j] is None}
+    if composite:
+        probe = spark.range(0).select(
+            *[F.lit(None).cast(t).alias(f"__leaf{i}__")
+              for i, t in enumerate(leaves)],
+        ).select(*[F.expr(sql) for sql in composite.values()])
+        for j, f in zip(composite, probe.schema.fields):
+            out[j] = f.dataType
+    return out
 
 
 def _referenced_columns(spec: N.MatchSpec, columns: list[str]) -> set[str]:
@@ -173,11 +195,7 @@ def _referenced_columns(spec: N.MatchSpec, columns: list[str]) -> set[str]:
     prunes to these (column pruning can't see through applyInPandas,
     so we do it explicitly; at scale this keeps wide rows out of the
     Arrow transfer and the per-row Python dicts)."""
-    symbols = set(spec.defines) | set(spec.subsets)
-    for sub in spec.subsets.values():
-        symbols.update(sub)
-    for p in _pattern_symbols(spec.pattern):
-        symbols.add(p)
+    symbols = alphabet(spec)
     refs: set[str] = set()
 
     def visit(e):
@@ -199,12 +217,12 @@ def _referenced_columns(spec: N.MatchSpec, columns: list[str]) -> set[str]:
 
 
 # DEFINE conditions built only from these nodes evaluate identically in
-# Catalyst and in the Python evaluator (NULL → no-match), so they can be
+# Catalyst and in the compiled program (NULL → no-match), so they can be
 # precomputed JVM-side as boolean columns — classification becomes an
-# array lookup instead of a per-row interpreted AST walk.  Division /
-# modulo / power stay out (ANSI-mode divide-by-zero errors vs the
-# evaluator's NULL); navigation/aggregate functions are inherently
-# row-context-dependent.
+# array lookup instead of a per-row closure call.  Division / modulo /
+# power stay out (their zero/overflow corners are ANSI errors in
+# Catalyst and typed errors in pyeval); navigation/aggregate functions
+# are inherently row-context-dependent.
 _VEC_BIN_OPS = {"=", "!=", "<", "<=", ">", ">=", "AND", "OR", "+", "-", "*"}
 _VEC_FUNCS = {"abs", "round", "floor", "ceil", "ceiling", "sqrt",
               "upper", "lower", "length", "coalesce"}
@@ -234,21 +252,6 @@ def _vectorizable_define(cond: N.Expr, symbols: set[str]) -> bool:
     return True
 
 
-def _pattern_symbols(pat) -> list[str]:
-    if pat is None:
-        return []
-    out = []
-    for node in [pat]:
-        if isinstance(node, N.PSym):
-            out.append(node.name)
-        elif isinstance(node, (N.PSeq, N.PAlt, N.PPermute)):
-            for it in node.items:
-                out.extend(_pattern_symbols(it))
-        elif isinstance(node, N.PQuant):
-            out.extend(_pattern_symbols(node.item))
-    return out
-
-
 def _flatten_join_refs_cep(df: DataFrame, plan, spec: N.MatchSpec):
     """Flatten table-qualified refs for the CEP kernels over a joined
     stream (processCEP enriches before the NFA,
@@ -262,7 +265,7 @@ def _flatten_join_refs_cep(df: DataFrame, plan, spec: N.MatchSpec):
     src = plan.source_alias or plan.source
     quals = ({j.table for j in plan.joins}
              | {j.alias for j in plan.joins if j.alias})
-    syms = set(_pattern_symbols(spec.pattern)) | set(spec.subsets)
+    syms = alphabet(spec)
     quals -= syms
     added: dict[str, str] = {}
 
@@ -338,9 +341,10 @@ def build_cep_parts(df: DataFrame, plan) -> dict:
         # ALL ROWS PER MATCH: input columns + MEASURES (measures shadow)
         fields = [StructField(f.name, f.dataType) for f in df.schema.fields
                   if f.name not in measure_aliases]
-    for j, m in enumerate(spec.measures):
-        alias = m.alias or f"m{j}"
-        fields.append(StructField(alias, _measure_type(m.expr, in_schema)))
+    types = _measure_types([m.expr for m in spec.measures], in_schema,
+                           df.sparkSession)
+    for j, (m, t) in enumerate(zip(spec.measures, types)):
+        fields.append(StructField(m.alias or f"m{j}", t))
     return {
         "spec": spec,
         "df": df,
@@ -364,8 +368,6 @@ def build_cep_parts(df: DataFrame, plan) -> dict:
         # or a null-ts row would match here and never there)
         "drop_null_ts": any(k.upper() == "MAXOUTOFORDERNESS"
                             for k in plan.options),
-        "measure_names": [m.alias or f"m{j}"
-                          for j, m in enumerate(spec.measures)],
         "order_cols": [c for c in order_sqls if c in in_schema],
     }
 
@@ -381,10 +383,9 @@ def execute_cep(spark: SparkSession, plan, source_df: DataFrame, executor) -> Da
     within_s = parts["within"]
     ts_ups = parts["ts_ups"]
     drop_null_ts = parts["drop_null_ts"]
-    measure_names = parts["measure_names"]
     order_cols = parts["order_cols"]
     all_rows = spec.rows_per_match == "all"
-    spec_ser = spec  # captured by closure (plain dataclasses — picklable)
+    program = Program(spec)  # compiled once; the closures ship by value
 
     names = [f.name for f in out_schema.fields]
 
@@ -393,16 +394,27 @@ def execute_cep(spark: SparkSession, plan, source_df: DataFrame, executor) -> Da
     # drive loop additionally jumps over start positions where no first
     # pattern symbol holds (Matcher._start_candidates) — at 100 TB the
     # Python matcher then only runs at candidate rows, not every row.
-    symbols = set(spec.defines) | set(spec.subsets)
-    symbols.update(_pattern_symbols(spec.pattern))
-    pre_cols: dict[str, str] = {}
-    for i, (sym, cond) in enumerate(spec.defines.items()):
-        if _vectorizable_define(cond, symbols):
-            pre_cols[sym] = f"__cls_{i}__"
+    symbols = alphabet(spec)
+    pre_cols = {sym: f"__cls_{i}__"
+                for i, (sym, cond) in enumerate(spec.defines.items())
+                if _vectorizable_define(cond, symbols)}
     if pre_cols:
         df = df.select("*", *[
             F.expr(render(spec.defines[sym])).alias(c)
             for sym, c in pre_cols.items()])
+
+    def _key_starts(pdf):
+        """First row of every key group in a key-sorted frame (NaN-safe
+        comparison; [0] when the frame is one key)."""
+        import numpy as np
+
+        change = np.zeros(len(pdf), dtype=bool)
+        change[0] = True
+        for c in part_names:
+            col = pdf[c]
+            same = col.eq(col.shift()) | (col.isna() & col.shift().isna())
+            change |= ~same.to_numpy(dtype=bool)
+        return np.flatnonzero(change)
 
     def run_task(pdf):
         """One sorted task frame (groups contiguous) → measure-row dicts.
@@ -414,7 +426,6 @@ def execute_cep(spark: SparkSession, plan, source_df: DataFrame, executor) -> Da
         per key, which at ~1M tiny keys would dwarf the matcher itself.
         """
         import numpy as np
-        import pandas as pd
 
         if drop_null_ts and ts_col in pdf.columns:
             # declared MAXOUTOFORDERNESS: NULL event-time rows drop on
@@ -423,7 +434,7 @@ def execute_cep(spark: SparkSession, plan, source_df: DataFrame, executor) -> Da
         n = len(pdf)
         pre_full = None
         if pre_cols:
-            pre_full = {sym: pdf[c].fillna(False).to_numpy(dtype=bool)
+            pre_full = {sym: pdf[c].eq(True).to_numpy(bool, na_value=False)
                         for sym, c in pre_cols.items()}
             pdf = pdf.drop(columns=list(pre_cols.values()))
         if ts_is_time:
@@ -447,18 +458,10 @@ def execute_cep(spark: SparkSession, plan, source_df: DataFrame, executor) -> Da
         # over the whole partition
         rows = _LazyRows(pdf)
 
-        if not part_names or n == 0:
-            bounds = [(0, n)] if n else []
+        if n == 0:
+            bounds = []
         else:
-            # rows arrive sorted by the partition key → group boundaries
-            # are key-change points (NaN-safe comparison)
-            change = np.zeros(n, dtype=bool)
-            change[0] = True
-            for c in part_names:
-                col = pdf[c]
-                same = col.eq(col.shift()) | (col.isna() & col.shift().isna())
-                change |= ~same.to_numpy(dtype=bool)
-            starts = np.flatnonzero(change)
+            starts = _key_starts(pdf)
             bounds = list(zip(starts.tolist(), np.append(starts[1:], n).tolist()))
 
         outs = []
@@ -466,8 +469,8 @@ def execute_cep(spark: SparkSession, plan, source_df: DataFrame, executor) -> Da
             pre = ({sym: a[lo:hi] for sym, a in pre_full.items()}
                    if pre_full is not None else None)
             grows = rows[lo:hi]
-            out = run_partition(spec_ser, grows, ts_full[lo:hi], within,
-                                pre_cls=pre)
+            out = run_partition(spec, grows, ts_full[lo:hi], within,
+                                pre_cls=pre, program=program)
             if not all_rows and out:
                 head = {name: grows[0][name] for name in part_names}
                 out = [{**head, **m} for m in out]
@@ -486,20 +489,6 @@ def execute_cep(spark: SparkSession, plan, source_df: DataFrame, executor) -> Da
                     .sortWithinPartitions(*part_names,
                                           *(order_cols or [ts_col])))
 
-        def _last_key_change(pdf):
-            """Index of the first row of the final key group (0 if the
-            whole frame is one key)."""
-            import numpy as np
-
-            change = np.zeros(len(pdf), dtype=bool)
-            for c in part_names:
-                col = pdf[c]
-                same = col.eq(col.shift()) | (col.isna() & col.shift().isna())
-                change |= ~same.to_numpy(dtype=bool)
-            change[0] = False
-            idx = np.flatnonzero(change)
-            return int(idx[-1]) if len(idx) else 0
-
         def map_groups(batch_iter):
             import pandas as pd
 
@@ -513,7 +502,7 @@ def execute_cep(spark: SparkSession, plan, source_df: DataFrame, executor) -> Da
                 if n_pending < _TASK_CHUNK_ROWS:
                     continue
                 pdf = pd.concat(pending, ignore_index=True)
-                cut = _last_key_change(pdf)
+                cut = int(_key_starts(pdf)[-1])  # the final key's first row
                 if cut > 0:
                     outs = run_task(pdf.iloc[:cut].reset_index(drop=True))
                     if outs:

@@ -261,32 +261,35 @@ def walk(e: Expr):
         yield from walk(c)
 
 
-def transform(e: Expr, fn) -> Expr:
+def transform(e: Expr, fn, pre=None) -> Expr:
     """Bottom-up rebuild: apply ``fn`` to every node, children first.
 
     ``fn`` returns a replacement node or the node unchanged.  This is the
     tree analog of the reference's string-rewriting passes (HAVING alias
     substitution, analytic/post-agg placeholder extraction,
-    rsql/ast.go:410-468, :1612-1724).
+    rsql/ast.go:410-468, :1612-1724).  ``pre``, if given, sees each node
+    first (top-down); a non-None result replaces the whole subtree.
     """
     if e is None:
         return None
+    if pre is not None and (r := pre(e)) is not None:
+        return r
     if isinstance(e, Func):
-        e = Func(e.name, [transform(a, fn) for a in e.args], e.distinct, e.over)
+        e = Func(e.name, [transform(a, fn, pre) for a in e.args], e.distinct, e.over)
     elif isinstance(e, Bin):
-        e = Bin(e.op, transform(e.left, fn), transform(e.right, fn))
+        e = Bin(e.op, transform(e.left, fn, pre), transform(e.right, fn, pre))
     elif isinstance(e, Un):
-        e = Un(e.op, transform(e.operand, fn))
+        e = Un(e.op, transform(e.operand, fn, pre))
     elif isinstance(e, Like):
-        e = Like(transform(e.operand, fn), transform(e.pattern, fn), e.negated)
+        e = Like(transform(e.operand, fn, pre), transform(e.pattern, fn, pre), e.negated)
     elif isinstance(e, IsNull):
-        e = IsNull(transform(e.operand, fn), e.negated)
+        e = IsNull(transform(e.operand, fn, pre), e.negated)
     elif isinstance(e, InList):
-        e = InList(transform(e.operand, fn), [transform(i, fn) for i in e.items], e.negated)
+        e = InList(transform(e.operand, fn, pre), [transform(i, fn, pre) for i in e.items], e.negated)
     elif isinstance(e, Between):
-        e = Between(transform(e.operand, fn), transform(e.low, fn), transform(e.high, fn), e.negated)
+        e = Between(transform(e.operand, fn, pre), transform(e.low, fn, pre), transform(e.high, fn, pre), e.negated)
     elif isinstance(e, Case):
-        e = Case(transform(e.operand, fn),
-                 [(transform(c, fn), transform(v, fn)) for c, v in e.whens],
-                 transform(e.else_, fn))
+        e = Case(transform(e.operand, fn, pre),
+                 [(transform(c, fn, pre), transform(v, fn, pre)) for c, v in e.whens],
+                 transform(e.else_, fn, pre))
     return fn(e)

@@ -67,6 +67,7 @@ class Planner:
         self.analytics: list[AnalyticSpec] = []
         self._agg_by_sql: dict[str, str] = {}
         self._fanout_names: set[str] = set()  # changed_cols outputs
+        self.trigger = None  # compiled GLOBAL WINDOW TRIGGER WHEN
 
     # ------------------------------------------------------------ lifting
     def _lift_aggregates(self, e: N.Expr) -> N.Expr:
@@ -286,6 +287,13 @@ class Planner:
             if w.kind == "global" and w.trigger_when is None:
                 raise PlanError("GLOBAL WINDOW requires TRIGGER WHEN "
                                 "(rsql/ast.go:73-79)")
+            if w.trigger_when is not None:
+                from ..operators.global_window import Trigger
+                from .pyeval import ExprError
+                try:  # compiled once; both GLOBAL WINDOW kernels run it
+                    self.trigger = Trigger(w.trigger_when)
+                except ExprError as exc:
+                    raise PlanError(str(exc)) from None
             if w.kind == "counting" and not isinstance(w.count, int):
                 raise PlanError("CountingWindow expects an integer count")
             for dur in [getattr(w, a, None) for a in ("size", "slide", "gap")]:
@@ -309,6 +317,16 @@ class Planner:
                                 "GROUP BY/windows (rsql/ast.go:248-274)")
             if stmt.match.pattern is None:
                 raise PlanError("MATCH_RECOGNIZE requires a PATTERN clause")
+            from ..cep.program import Program
+            from .pyeval import ExprError
+            # an expression outside the core fails now, never per row.
+            # Validation only: the kernels compile the spec they run,
+            # which join-ref flattening and lookup rewrites change
+            # after planning (and streaming adds its MAXNAVOFFSET cap)
+            try:
+                Program(stmt.match)
+            except ExprError as exc:
+                raise PlanError(str(exc)) from None
         else:
             has_agg = any(not isinstance(f.expr, N.Star) and _has_aggregate(f.expr)
                           for f in stmt.fields)
@@ -331,6 +349,7 @@ class Planner:
             limit=stmt.limit,
             distinct=stmt.distinct,
             options=dict(stmt.with_opts),
+            trigger=self.trigger,
         )
         ts_field = stmt.with_opts.get("TIMESTAMP")
         if ts_field:

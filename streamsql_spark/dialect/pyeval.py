@@ -45,6 +45,7 @@ import json as _json
 import math
 import re
 import time as _time
+from dataclasses import dataclass
 from decimal import ROUND_HALF_UP, Decimal
 
 from . import nodes as N
@@ -53,6 +54,76 @@ from . import nodes as N
 class Fallback(Exception):
     """Value combination outside the proven subset — re-evaluate this
     event through the Spark path."""
+
+
+class ExprError(ValueError):
+    """An expression outside the subset (at compile time) or a value
+    combination outside it (at run time) on a caller with no Spark path
+    to re-run the row on: CEP DEFINE/MEASURES and GLOBAL WINDOW
+    TRIGGER WHEN.  Raised instead of reading the row as "no match" or
+    "not fired"."""
+
+
+@dataclass
+class Slot(N.Expr):
+    """A leaf whose value a caller computes: ``compile_expr`` uses
+    ``fn(row)`` as the node's closure.  CEP navigation/aggregates and
+    TRIGGER WHEN running aggregates become slots, so every operator and
+    function around them keeps this module's semantics."""
+    fn: object
+
+
+def sql_text(e: N.Expr) -> str:
+    """An expression's SQL for error messages (best effort)."""
+    from .render import render
+
+    try:
+        return render(e, "allow")
+    except ValueError:
+        return type(e).__name__
+
+
+def compile_strict(e: N.Expr, what: str):
+    """``compile_expr`` for the callers without a Spark path: an
+    uncompilable expression raises :class:`ExprError` now, and a
+    runtime :class:`Fallback` raises it per row.  ``what`` names the
+    expression in the message (e.g. ``"DEFINE A AS v > 1"``).  This is
+    the only place the core treats its callers differently."""
+    fn = compile_expr(N.transform(e, _jvm_float_args))
+    if fn is None:
+        raise ExprError(
+            f"{what} is outside the in-process expression subset (the "
+            "emit_sync pyeval surface)")
+
+    def strict(row):
+        try:
+            return fn(row)
+        except Fallback:
+            raise ExprError(
+                f"{what}: a value combination outside the "
+                "in-process expression subset (e.g. mixed-type "
+                "comparison, division by zero, NaN) — there is no Spark "
+                "path to re-run this row on") from None
+    return strict
+
+
+def _jvm_float_args(e: N.Expr) -> N.Expr:
+    """concat() stringifies floats on the JVM (CAST AS STRING), which
+    the per-event path leaves to Spark; a compile_strict caller has no
+    JVM, so float arguments arrive pre-formatted in Java layout."""
+    if not (isinstance(e, N.Func) and e.name.lower() == "concat"):
+        return e
+    fns = [compile_expr(a) for a in e.args]
+    if any(f is None for f in fns):
+        return e  # the enclosing compile reports it
+
+    def java_str(f):
+        def arg(row):
+            v = f(row)
+            return _java_double_str(v) if isinstance(v, float) else v
+        return arg
+    return N.Func(e.name, [Slot(java_str(f)) for f in fns], e.distinct,
+                  e.over)
 
 
 _NUM = (int, float)
@@ -132,6 +203,15 @@ def _arith(op: str, a, b):
     raise Fallback()
 
 
+def _same_time_kind(a, b) -> bool:
+    """Both timestamps (equally naive or zone-aware) or both dates:
+    Python orders these as Spark does.  A date against a timestamp
+    takes Spark's cast rules, so it stays outside."""
+    if isinstance(a, _dt.datetime) and isinstance(b, _dt.datetime):
+        return (a.tzinfo is None) == (b.tzinfo is None)
+    return type(a) is type(b) is _dt.date
+
+
 def _cmp(op: str, a, b):
     if a is None or b is None:
         return None
@@ -141,11 +221,14 @@ def _cmp(op: str, a, b):
             raise Fallback()
     elif isinstance(a, _NUM) and isinstance(b, _NUM):
         # Spark orders NaN above everything and NaN = NaN is true —
-        # IEEE Python disagrees, so NaN comparisons take the Spark path
-        _finite(a), _finite(b)
+        # IEEE Python disagrees, so NaN comparisons take the Spark path;
+        # ±Infinity orders the same in both
+        _num(a), _num(b)
+        if a != a or b != b:
+            raise Fallback()
     elif isinstance(a, str) and isinstance(b, str):
         pass
-    else:
+    elif not _same_time_kind(a, b):
         # mixed numeric/string comparison: Spark's implicit-cast rules
         # are subtle — not our problem to reimplement
         raise Fallback()
@@ -210,6 +293,8 @@ def _round_half_up(x, d=0):
         return None
     if isinstance(d, bool) or not isinstance(d, int):
         raise Fallback()
+    if isinstance(x, float) and not math.isfinite(x):
+        return x  # Spark round(±Infinity/NaN) passes the value through
     x = _finite(x)
     q = Decimal(1).scaleb(-int(d))
     r = float(Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP))
@@ -463,8 +548,76 @@ def _cast_string(v):
     if isinstance(v, int):
         return str(_num(v))  # _num: ints beyond BIGINT → Fallback
     # float formatting is Double.toString — JVM-version-specific digit
-    # generation: Spark path owns it
+    # generation: Spark path owns it (compile_strict callers format
+    # in-process, see _java_double_str)
     raise Fallback()
+
+
+# legacy FloatingDecimal (JDK <= 18) prints an extra digit for this
+# exact-integer double; Ryu (JDK >= 19, JDK-4511638) prints the
+# shortest '9.745699541085918E16', which is this module's layout
+_LEGACY_PROBE_VALUE = 9.745699541085918e16
+_LEGACY_PROBE_STR = "9.7456995410859184E16"
+
+
+def jvm_double_str_is_legacy(spark) -> bool:
+    """Runtime probe of the deployed JVM's Double.toString digit
+    generator.  On Ryu JVMs (>= 19) ``_java_double_str`` is exact
+    EVERYWHERE; on legacy JVMs (<= 18) it is exact outside two pinned
+    classes (see _java_double_str)."""
+    s = spark.sql(
+        f"SELECT cast({_LEGACY_PROBE_VALUE!r} as double)"
+        " AS x").selectExpr("cast(x as string)").first()[0]
+    return s == _LEGACY_PROBE_STR
+
+
+def _java_double_str(x: float) -> str:
+    """Java Double.toString layout — what CAST(x AS STRING) prints on
+    the JVM: scientific notation at |x| >= 1e7 and < 1e-3 (Python
+    switches at 1e16/1e-5), 'E' with no '+', NaN/Infinity spelled out.
+    Python's repr supplies the shortest round-trip digits; only the
+    layout differs.
+
+    Exactness, pinned against the real JVM by
+    tests/test_cep.py::test_java_double_str_matches_jvm_cast over
+    random bit patterns + 17-significant-digit doubles + denormals:
+    on Ryu JVMs (JDK >= 19) output equals CAST everywhere; on legacy
+    JVMs (JDK <= 18, probed via jvm_double_str_is_legacy) the ONLY
+    divergences are (a) exact-integer doubles >= 2^53, (b) subnormals,
+    and (c) mantissas with >= 40 trailing zero bits (e.g. 2^-44) —
+    classes where legacy FloatingDecimal emits extra trailing digits
+    of the exact expansion ('4.9E-324' vs shortest '5.0E-324',
+    JDK-4511638) — and both strings round-trip to the same double.
+    The per-event path still falls back on floats (the Spark path owns
+    the digits there); compile_strict callers have no JVM to ask."""
+    if math.isnan(x):
+        return "NaN"
+    if math.isinf(x):
+        return "Infinity" if x > 0 else "-Infinity"
+    sign = "-" if math.copysign(1.0, x) < 0 else ""
+    if x == 0:
+        return sign + "0.0"
+    s = repr(abs(x))
+    if "e" in s:
+        mant, e = s.split("e")
+        e = int(e)
+    else:
+        mant, e = s, 0
+    ip, _, fp = mant.partition(".")
+    digits = ip + fp
+    point = len(ip) + e  # value = 0.<digits> * 10**point
+    stripped = digits.lstrip("0")
+    point -= len(digits) - len(stripped)
+    digits = stripped.rstrip("0") or "0"
+    exp = point - 1  # floor(log10(|x|))
+    if -3 <= exp <= 6:  # Java decimal-notation window
+        if exp >= 0:
+            whole = digits.ljust(exp + 1, "0")
+            frac = digits[exp + 1:] or "0"
+            return f"{sign}{whole[:exp + 1]}.{frac}"
+        return sign + "0." + "0" * (-exp - 1) + digits
+    frac = digits[1:] or "0"
+    return f"{sign}{digits[0]}.{frac}E{exp}"
 
 
 _BOOL_TRUE = frozenset(("t", "true", "y", "yes", "1"))
@@ -1867,6 +2020,8 @@ def _compile_json_extract(e: N.Func):
 def compile_expr(e: N.Expr):
     """AST → ``fn(row) -> value``; None when the node kind (or any
     child) is outside the supported subset."""
+    if isinstance(e, Slot):
+        return e.fn
     if isinstance(e, N.Lit):
         v = e.value
         return lambda row: v

@@ -667,12 +667,18 @@ def register_aggregate_function(spark, name: str, fn, return_type="double") -> N
     grouped-agg pandas UDF (partial batches per group, JVM-side
     grouping); becomes callable in dialect GROUP BY queries immediately.
     """
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import _parse_datatype_string
 
     dt = return_type if not isinstance(return_type, str) \
         else _parse_datatype_string(return_type)
-    udaf = pandas_udf(fn, dt, PandasUDFType.GROUPED_AGG)
+
+    def agg(values):
+        return fn(values)
+    # Series -> scalar type hints select the grouped-agg pandas UDF
+    agg.__annotations__ = {"values": pd.Series, "return": object}
+    udaf = pandas_udf(agg, dt)
     spark.udf.register(name, udaf)
     AGG_RENDERERS[name.lower()] = _simple(f"{name}({{0}})")
 

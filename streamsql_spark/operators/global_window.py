@@ -23,59 +23,74 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..dialect import nodes as N
-from ..dialect.render import render
+from ..dialect.pyeval import ExprError, Slot, compile_strict, sql_text
+from ..streaming.aggutil import acc_new, acc_result, acc_update
 
 # aggregates supported in running (O(1)) form — mirrors the reference's
 # incremental trigger aggregates
 _RUNNING_AGGS = {"count", "sum", "avg", "min", "max"}
 
 
-def _compile_trigger(trig: N.Expr):
-    """Compile the TRIGGER WHEN predicate into (py_source, agg_specs).
+class Trigger:
+    """TRIGGER WHEN compiled onto the pyeval core, once per statement:
+    each running aggregate becomes a Slot reading its accumulator
+    (aggutil ``acc_*``), and the predicate around them is pyeval's —
+    SQL three-valued logic, Spark arithmetic.  :meth:`fired` is the one
+    running-aggregate step the batch segmenter and the streaming kernel
+    share."""
 
-    agg_specs: list of (var_name, func_name, arg_col | None).
-    The predicate becomes a Python expression over the running-agg vars.
-    """
-    aggs: list[tuple[str, str, str | None]] = []
+    def __init__(self, trig: N.Expr):
+        self.aggs: list[tuple[str, str | None]] = []  # (acc kind, column)
 
-    def py(e: N.Expr) -> str:
-        if isinstance(e, N.Lit):
-            return repr(e.value)
-        if isinstance(e, N.Func) and e.name.lower() in _RUNNING_AGGS:
-            fname = e.name.lower()
-            arg_col = None
-            if e.args and not isinstance(e.args[0], N.Star):
-                if not isinstance(e.args[0], N.Col):
-                    raise ValueError(
-                        "TRIGGER WHEN aggregates support plain column args")
-                arg_col = e.args[0].name
-            var = f"_a{len(aggs)}"
-            aggs.append((var, fname, arg_col))
-            return var
-        if isinstance(e, N.Col):
-            raise ValueError(
-                f"TRIGGER WHEN may only reference aggregates, got column {e.name}")
-        if isinstance(e, N.Bin):
-            op = {"AND": "and", "OR": "or", "=": "==", "<>": "!=",
-                  "!=": "!=", "%": "%"}.get(e.op, e.op)
-            if e.op == "^":
-                return f"({py(e.left)} ** {py(e.right)})"
-            return f"({py(e.left)} {op} {py(e.right)})"
-        if isinstance(e, N.Un):
-            return f"(not {py(e.operand)})" if e.op == "NOT" else f"(-{py(e.operand)})"
-        raise ValueError(f"unsupported TRIGGER WHEN construct: {type(e).__name__}")
+        def pre(e):
+            if isinstance(e, N.Func) and e.name.lower() in _RUNNING_AGGS:
+                arg = e.args[0] if e.args else N.Star()
+                kind = e.name.lower()
+                if isinstance(arg, N.Star) and kind == "count":
+                    kind, col = "count_star", None
+                elif isinstance(arg, N.Col):
+                    col = arg.name
+                else:
+                    raise ExprError("TRIGGER WHEN aggregates support "
+                                    "plain column args (and count(*))")
+                k = len(self.aggs)
+                self.aggs.append((kind, col))
+                return Slot(lambda accs: acc_result(kind, accs[k]))
+            if isinstance(e, N.Col):
+                raise ExprError("TRIGGER WHEN may only reference "
+                                f"aggregates, got column {e.name}")
+            return None
 
-    return py(trig), aggs
+        # AND TRUE: a non-boolean predicate fails typed (pyeval's AND
+        # admits only booleans and NULL)
+        self.pred = compile_strict(
+            N.Bin("AND", N.transform(trig, lambda n: n, pre=pre),
+                  N.Lit(True)),
+            f"TRIGGER WHEN {sql_text(trig)}")
+        self.columns = sorted({c for _, c in self.aggs if c is not None})
+
+    def new(self) -> list:
+        return [acc_new() for _ in self.aggs]
+
+    def read(self, pdf) -> dict:
+        """The aggregate argument columns of a pandas batch as Python
+        lists, NULL (NaN/NaT/NA) as None."""
+        return {c: pdf[c].astype(object).where(pdf[c].notna(), None)
+                .tolist() for c in self.columns}
+
+    def fired(self, accs: list, cols: dict, i: int) -> bool:
+        """Fold row ``i`` of ``cols`` (column → values) into ``accs``;
+        True when the predicate holds — the caller then emits the
+        pending rows and starts fresh accumulators.  NULL (UNKNOWN)
+        does not fire; a value outside the core raises ExprError."""
+        for acc, (_, col) in zip(accs, self.aggs):
+            acc_update(acc, None if col is None else cols[col][i])
+        return self.pred(accs) is True
 
 
 def segment_by_trigger(df: DataFrame, plan, ts_col: str) -> DataFrame:
     """Add ``__win_id__`` per completed trigger segment; drop pending rows."""
-    trig = plan.window.trigger_when
-    if trig is None:
-        raise ValueError("GLOBAL WINDOW without TRIGGER WHEN never emits "
-                         "(rejected at parse time in the reference, rsql/ast.go:73-79)")
-    src, agg_specs = _compile_trigger(trig)
-    code = compile(src, "<trigger_when>", "eval")
+    trigger = plan.trigger  # compiled by the planner; never None here
     order_col = ts_col if ts_col in df.columns else None
     if order_col is None:
         # same typed refusal as the count-only fast path
@@ -91,58 +106,14 @@ def segment_by_trigger(df: DataFrame, plan, ts_col: str) -> DataFrame:
     out_schema = StructType(df.schema.fields + [StructField("__win_id__", LongType())])
 
     def segment(pdf):
-        import pandas as pd
-
-        if order_col is not None:
-            pdf = pdf.sort_values(order_col, kind="mergesort")
-        win_ids = []
-        win = 0
-        state: dict[str, object] = {}
-        counts: dict[str, int] = {}
-        pending: list[int] = []
+        pdf = pdf.sort_values(order_col, kind="mergesort")
+        cols = trigger.read(pdf)
         assigned = [None] * len(pdf)
-        cols = {c: pdf[c].tolist() for c in pdf.columns}
+        accs, start, win = trigger.new(), 0, 0
         for i in range(len(pdf)):
-            env = {}
-            for var, fname, argc in agg_specs:
-                if fname == "count":
-                    # SQL count(col) skips NULLs — which pandas delivers
-                    # as float NaN for numeric columns, not None
-                    cv = cols[argc][i] if argc is not None else None
-                    counted = (argc is None
-                               or (cv is not None and not pd.isna(cv)))
-                    counts[var] = counts.get(var, 0) + (1 if counted else 0)
-                    env[var] = counts[var]
-                    continue
-                v = cols[argc][i] if argc else None
-                if v is not None and not pd.isna(v):
-                    if fname == "sum":
-                        state[var] = (state.get(var) or 0) + v
-                    elif fname == "min":
-                        state[var] = v if var not in state else min(state[var], v)
-                    elif fname == "max":
-                        state[var] = v if var not in state else max(state[var], v)
-                    elif fname == "avg":
-                        s, c = state.get(var, (0.0, 0))
-                        state[var] = (s + v, c + 1)
-                if fname == "avg":
-                    s, c = state.get(var, (0.0, 0))
-                    env[var] = (s / c) if c else None
-                else:
-                    env[var] = state.get(var)
-            pending.append(i)
-            try:
-                fired = bool(eval(code, {"__builtins__": {}}, env))
-            except (TypeError, ZeroDivisionError):
-                # None in comparison / div-by-zero → not fired
-                fired = False
-            if fired:
-                for j in pending:
-                    assigned[j] = win
-                win += 1
-                pending.clear()
-                state.clear()
-                counts.clear()
+            if trigger.fired(accs, cols, i):
+                assigned[start:i + 1] = [win] * (i + 1 - start)
+                accs, start, win = trigger.new(), i + 1, win + 1
         pdf = pdf.assign(__win_id__=assigned)
         pdf = pdf[pdf["__win_id__"].notna()]
         return pdf.assign(__win_id__=pdf["__win_id__"].astype("int64"))

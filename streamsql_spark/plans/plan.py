@@ -92,6 +92,7 @@ class QueryPlan:
     group_sqls: list[str] = field(default_factory=list)
     agg_specs: list[AggSpec] = field(default_factory=list)
     having_sql: str | None = None
+    trigger: object = None            # GLOBAL WINDOW: global_window.Trigger
     # shared tail
     outputs: list[OutputField] = field(default_factory=list)
     order_by: list[tuple] = field(default_factory=list)  # [(sql, asc)]

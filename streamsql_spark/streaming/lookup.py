@@ -129,13 +129,6 @@ def equi_pairs(j, allow_residual: bool = False):
     return (pairs, residual) if allow_residual else pairs
 
 
-def _pattern_shadow(spec) -> set:
-    """Pattern symbols + SUBSET names shadow join aliases inside
-    MATCH_RECOGNIZE expressions (A.temp stays a symbol navigation)."""
-    from ..cep.executor import _pattern_symbols
-    return set(_pattern_symbols(spec.pattern)) | set(spec.subsets)
-
-
 def plan_watches_bare_star(plan) -> bool:
     """True when the plan carries a bare ``SELECT *`` output or a
     ``had_changed(..., '*')`` analytic — the shapes whose star
@@ -250,8 +243,11 @@ def apply_lookup_joins(df: DataFrame, plan, sources: dict,
 
     quals = {j.table for j in lookups} | {j.alias for j in lookups
                                           if j.alias} | prejoin_quals
-    shadow = _pattern_shadow(plan.stmt.match) \
-        if plan.mode == "cep" and plan.stmt.match is not None else set()
+    shadow: frozenset = frozenset()
+    if plan.mode == "cep" and plan.stmt.match is not None:
+        # pattern symbols shadow join aliases (A.temp stays navigation)
+        from ..cep.program import alphabet
+        shadow = alphabet(plan.stmt.match)
     quals -= shadow
     mapping: dict[str, str] = {}
     # source-qualifier stripping is CONDITIONAL on whether downstream

@@ -16,7 +16,8 @@ State is a single pickled blob per key (BinaryType) — schema-free, like
 the reference's per-key Go structs.  Keys parallelize across executors;
 within a key processing is sequential by construction (same as the
 reference's per-partition goroutine).  Aggregate/analytic *arguments*
-are pre-projected JVM-side so kernels never evaluate SQL expressions.
+are pre-projected JVM-side; the expressions that must run per row
+(TRIGGER WHEN, DEFINE/MEASURES) are pyeval closures compiled once.
 """
 
 from __future__ import annotations
@@ -807,26 +808,41 @@ def lateness_window_stream(df: DataFrame, plan, ts_col: str) -> DataFrame:
 
 # ----------------------------------------------------------------- global
 
+def _legacy_trigger_accs(trigger, old: dict, counts: dict) -> list:
+    """Trigger accumulators from a checkpoint written before TRIGGER
+    WHEN ran on aggutil accumulators.  That layout kept
+    ``{"_a<k>": value}`` (avg as ``(sum, n)``) plus ``{"_a<k>": n}``
+    counts for the k-th running aggregate, numbered in the same
+    left-to-right order as ``trigger.aggs``."""
+    accs = trigger.new()
+    for k, ((kind, _), acc) in enumerate(zip(trigger.aggs, accs)):
+        var = f"_a{k}"
+        if kind in ("count", "count_star"):
+            acc[0] = acc[1] = counts.get(var, 0)
+        elif old.get(var) is not None:
+            v = old[var]
+            acc[0] = acc[1] = acc[2] = 1
+            if kind == "avg":
+                acc[3], acc[2] = v
+            elif kind == "sum":
+                acc[3] = v
+            else:  # min / max
+                acc[6 if kind == "min" else 7] = v
+    return accs
+
+
 def global_window_stream(df: DataFrame, plan, ts_col: str | None) -> DataFrame:
     """Streaming GLOBAL WINDOW TRIGGER WHEN: per-key buffered arg values +
     running trigger aggregates; on predicate hit emit + purge."""
-    from ..operators.global_window import _compile_trigger
-
-    trig = plan.window.trigger_when
+    trigger = plan.trigger  # compiled by the planner
     ttl_ms = state_ttl_ms(plan)
-    src, trig_aggs = _compile_trigger(trig)
-    code_src = src  # compile() inside the kernel (code objects don't pickle)
 
     df, keys = _key_columns(df, plan)
     df, agg_specs = _prep_agg_columns(df, plan)
-    # trigger aggregate argument columns
-    trig_cols = []
-    for var, fname, argc in trig_aggs:
-        if argc is not None and argc not in df.columns:
-            raise ValueError(f"TRIGGER WHEN references unknown column {argc}")
-        trig_cols.append((var, fname, argc))
-    df = _prune_kernel_input(df, keys, plan, ts_col,
-                             extra=[c for _, _, c in trig_cols if c])
+    for c in trigger.columns:
+        if c not in df.columns:
+            raise ValueError(f"TRIGGER WHEN references unknown column {c}")
+    df = _prune_kernel_input(df, keys, plan, ts_col, extra=trigger.columns)
 
     fields = [StructField(k, _field_type(df, k)) for k in keys]
     for ph, kname, arg_col, _ in agg_specs:
@@ -840,7 +856,6 @@ def global_window_stream(df: DataFrame, plan, ts_col: str | None) -> DataFrame:
     int_phs = _int_out_phs(out_schema)
 
     arg_cols = [c for _, _, c, _ in agg_specs if c is not None]
-    read_cols = sorted({*arg_cols, *[c for _, _, c in trig_cols if c]})
     order = [ts_col] if ts_col and ts_col in df.columns else []
     key_names = list(keys)
     # all-algebraic output aggregates → O(1) partials per key instead of
@@ -861,24 +876,21 @@ def global_window_stream(df: DataFrame, plan, ts_col: str | None) -> DataFrame:
         if algebraic:
             st = _load_state(state) or {
                 "accs": [acc_new() for _ in agg_specs],
-                "trig": {}, "counts": {}}
+                "trig": trigger.new()}
             accs = st["accs"]
             buf = None
         else:
-            st = _load_state(state) or {"buf": [], "trig": {}, "counts": {}}
+            st = _load_state(state) or {"buf": [], "trig": trigger.new()}
             buf = st["buf"]
-        tstate, counts = st["trig"], st["counts"]
-        code = _trigger_code_cache.get(code_src)
-        if code is None:
-            # compile ONCE per worker process, not once per key group
-            # per micro-batch (code objects don't pickle, hence the
-            # in-kernel compile; the module-level cache pays it once)
-            code = compile(code_src, "<trigger_when>", "eval")
-            _trigger_code_cache[code_src] = code
+        taccs = st["trig"]
+        if isinstance(taccs, dict):  # pre-accumulator checkpoint
+            taccs = _legacy_trigger_accs(trigger, taccs,
+                                         st.pop("counts", {}))
         rows_out = []
         fire_no = 0
         if len(pdf):
-            vals = {c: pdf[c].tolist() for c in read_cols}
+            vals = {c: pdf[c].tolist() for c in arg_cols}
+            tvals = trigger.read(pdf)
             for i in range(len(pdf)):
                 if algebraic:
                     for k, (ph, kname, arg_col, extra) in enumerate(agg_specs):
@@ -887,37 +899,7 @@ def global_window_stream(df: DataFrame, plan, ts_col: str | None) -> DataFrame:
                 else:
                     buf.append(tuple(clean_by[c](vals[c][i]) if c else None
                                      for c in arg_cols))
-                env = {}
-                for var, fname, argc in trig_cols:
-                    v = _clean(vals[argc][i]) if argc else None
-                    if fname == "count":
-                        counts[var] = counts.get(var, 0) + (
-                            1 if argc is None or v is not None else 0)
-                        env[var] = counts[var]
-                        continue
-                    if v is not None:
-                        if fname == "sum":
-                            tstate[var] = (tstate.get(var) or 0) + v
-                        elif fname == "min":
-                            tstate[var] = v if var not in tstate else min(tstate[var], v)
-                        elif fname == "max":
-                            tstate[var] = v if var not in tstate else max(tstate[var], v)
-                        elif fname == "avg":
-                            s, c = tstate.get(var, (0.0, 0))
-                            tstate[var] = (s + v, c + 1)
-                    if fname == "avg":
-                        s, c = tstate.get(var, (0.0, 0))
-                        env[var] = (s / c) if c else None
-                    else:
-                        env[var] = tstate.get(var)
-                try:
-                    fired = bool(eval(code, {"__builtins__": {}}, env))
-                except (TypeError, ZeroDivisionError):
-                    # None in comparison / div-by-zero aggregate state:
-                    # the trigger is simply not fired — a predicate
-                    # arithmetic error must never kill the query
-                    fired = False
-                if fired:
+                if trigger.fired(taccs, tvals, i):
                     out = dict(zip(key_names, key))
                     if algebraic:
                         for k, (ph, kname, arg_col, extra) in enumerate(agg_specs):
@@ -942,14 +924,9 @@ def global_window_stream(df: DataFrame, plan, ts_col: str | None) -> DataFrame:
                         repr(tuple(key)) + f"#{fire_no:09d}"
                     fire_no += 1
                     rows_out.append(out)
-                    tstate.clear()
-                    counts.clear()
-        if algebraic:
-            _save_state(state, {"accs": accs, "trig": tstate,
-                                "counts": counts}, ttl_ms)
-        else:
-            _save_state(state, {"buf": buf, "trig": tstate,
-                                "counts": counts}, ttl_ms)
+                    taccs = trigger.new()
+        st["trig"] = taccs  # accs / buf are updated in place
+        _save_state(state, st, ttl_ms)
         if rows_out:
             yield pd.DataFrame(rows_out, columns=[f.name for f in out_schema.fields])
 
@@ -1292,15 +1269,10 @@ def analytic_stream(df: DataFrame, plan, ts_col: str | None) -> DataFrame:
 
 _CEP_MAX_BUFFER = 10_000  # reference maxRunRows default (cep/engine.go:17-23)
 
-# per-worker memo for TRIGGER WHEN eval code (global_window_stream):
-# keyed by source text; lives in the Python worker process
-_trigger_code_cache: dict[str, object] = {}
-
 
 def cep_flush_outputs(st: dict, spec, ts_col: str, ts_is_time: bool,
                       within, ts_ups, part_names, key,
-                      all_rows_mode: bool,
-                      nav_cap: int | None = None) -> list[dict]:
+                      all_rows_mode: bool, program=None) -> list[dict]:
     """STATETTL reap = this kernel's ``Engine.Flush()``/``Stop()`` analog
     (cep/engine.go:238-267,321): emit everything the reference's Flush
     would — completed matches still held inside the reorder horizon AND
@@ -1315,28 +1287,38 @@ def cep_flush_outputs(st: dict, spec, ts_col: str, ts_is_time: bool,
     the could-still-extend hold, it does not resurrect expired spans."""
     from ..cep.engine import Matcher
 
-    rows, mn = st["rows"], st["mn"]
+    rows = st["rows"]
     if not rows:
         return []
+    w = within * ts_ups if within is not None and not ts_is_time \
+        else within
+    matcher = Matcher(spec, rows, _cep_times(rows, ts_col, ts_is_time), w,
+                      program=program)
+    return _cep_drive(matcher, st["mn"], key, part_names, all_rows_mode,
+                      True, st.get("ctx", 0))[0]
+
+
+def _cep_times(rows, ts_col: str, ts_is_time: bool) -> list:
+    """Buffered rows' event times as numbers (timestamps → epoch s)."""
     if ts_is_time:
-        t_end = [r[ts_col].timestamp() if r.get(ts_col) is not None else None
-                 for r in rows]
-        w_end = within
-    else:
-        t_end = [r.get(ts_col) for r in rows]
-        w_end = within * ts_ups if within is not None else None
-    matcher = Matcher(spec, rows, t_end, w_end, nav_cap=nav_cap)
+        return [r[ts_col].timestamp() if r.get(ts_col) is not None
+                else None for r in rows]
+    return [r.get(ts_col) for r in rows]
+
+
+def _cep_drive(matcher, mn: int, key, part_names, all_rows_mode: bool,
+               flush: bool, start_at: int):
+    """Emit what ``find_emittable`` releases from one key's buffer →
+    (measure rows, last match number, consumed-upto)."""
     matcher.match_number = mn
-    matches, _ = matcher.find_emittable(flush=True,
-                                        start_at=st.get("ctx", 0))
+    matches, consumed = matcher.find_emittable(flush=flush,
+                                               start_at=start_at)
+    head = {} if all_rows_mode else dict(zip(part_names, key))
     outs = []
     for bindings in matches:
         mn += 1
-        for m in matcher.measure_rows(bindings, mn):
-            if not all_rows_mode:
-                m = {**dict(zip(part_names, key)), **m}
-            outs.append(m)
-    return outs
+        outs.extend({**head, **m} for m in matcher.measure_rows(bindings, mn))
+    return outs, mn, consumed
 
 
 def cep_stream(spark, plan, df: DataFrame):
@@ -1354,7 +1336,6 @@ def cep_stream(spark, plan, df: DataFrame):
     ts_is_time = parts["ts_is_time"]
     within = parts["within"]
     df = parts["df"]
-    measure_names = parts["measure_names"]
     order_cols = parts["order_cols"]
     all_rows_mode = spec.rows_per_match == "all"
     # declared MAXOUTOFORDERNESS: hold a reorder horizon before the
@@ -1366,18 +1347,18 @@ def cep_stream(spark, plan, df: DataFrame):
     moo_s = opt_duration_s(plan, "MAXOUTOFORDERNESS", 0.0)
     ts_ups = parts["ts_ups"]  # numeric event-time units per second
 
-    from ..cep.engine import (Matcher, _max_next_offset,
-                              nonliteral_nav_offset)
+    from ..cep.engine import Matcher
+    from ..cep.program import Program, nonliteral_nav_offset
 
     # PREV() in DEFINE/MEASURES navigates PHYSICALLY over partition
     # rows — consumed rows must stay readable behind the matchable
     # region or PREV at the trimmed buffer's head reads nil where the
     # batch paths see the real predecessor (r12 CEP-fuzz find).  Keep
-    # this many already-consumed rows as navigation-only context.
-    # Spans come from LITERAL offsets; a dynamic offset would silently
-    # under-retain, so it fails typed here (batch/flush support it).
+    # program.prev_span already-consumed rows as navigation-only
+    # context.  Spans come from LITERAL offsets; a dynamic offset would
+    # silently under-retain, so it fails typed here without a declared
+    # cap (batch/flush support it).
     from ..engine.batch import ExecError
-    nav_exprs = list((spec.defines or {}).values()) + list(spec.measures)
     opts_up = {k.upper(): v for k, v in plan.options.items()}
     nav_cap_raw = opts_up.get("MAXNAVOFFSET")
     nav_cap = None
@@ -1390,7 +1371,8 @@ def cep_stream(spark, plan, df: DataFrame):
                 f"{nav_cap_raw!r}") from None
         if nav_cap < 1:
             raise ExecError("MAXNAVOFFSET must be >= 1")
-    bad_nav = nonliteral_nav_offset(nav_exprs)
+    bad_nav = nonliteral_nav_offset([*spec.defines.values(),
+                                     *spec.measures])
     if bad_nav is not None and nav_cap is None:
         raise ExecError(
             f"{bad_nav}() with a non-literal offset needs a declared "
@@ -1401,13 +1383,7 @@ def cep_stream(spark, plan, df: DataFrame):
             "(MAXNAVOFFSET='<max rows any runtime offset can reach>') "
             "— a runtime offset beyond the cap then fails typed — or "
             "run this statement on the batch path")
-    prev_span = max(
-        _max_next_offset(list((spec.defines or {}).values()),
-                         floor=0, fname="prev"),
-        _max_next_offset(spec.measures, floor=0, fname="prev"))
-    if nav_cap is not None and \
-            nonliteral_nav_offset(nav_exprs, ("prev",)) is not None:
-        prev_span = max(prev_span, nav_cap)
+    program = Program(spec, nav_cap)  # compiled once; ships by value
 
     # typed cleaners: the buffered row dicts feed DEFINE/MEASURES
     # evaluation, so an int column must not arrive as 5 from one
@@ -1424,7 +1400,7 @@ def cep_stream(spark, plan, df: DataFrame):
             st = _load_state(state) or {"rows": [], "mn": 0}
             outs = cep_flush_outputs(st, spec, ts_col, ts_is_time,
                                      within, ts_ups, part_names, key,
-                                     all_rows_mode, nav_cap=nav_cap)
+                                     all_rows_mode, program)
             state.remove()
             if outs:
                 yield pd.DataFrame(
@@ -1481,13 +1457,11 @@ def cep_stream(spark, plan, df: DataFrame):
                     rows = [rows[i] for i in order]
         if len(rows) > _CEP_MAX_BUFFER:
             rows = rows[-_CEP_MAX_BUFFER:]
+        ts_vals = _cep_times(rows, ts_col, ts_is_time)
         if ts_is_time:
-            ts_vals = [r[ts_col].timestamp() if r[ts_col] is not None else None
-                       for r in rows]
             w = within
             moo = moo_s
         else:
-            ts_vals = [r.get(ts_col) for r in rows]
             # numeric event time: scale per TIMEUNIT, like the
             # pipeline's watermark (r7 review: assuming ms made the
             # horizon 1000x off under TIMEUNIT='s')
@@ -1517,27 +1491,12 @@ def cep_stream(spark, plan, df: DataFrame):
         else:
             wm = None
 
-        if ctx_rows:
-            if ts_is_time:
-                ts_ctx = [r[ts_col].timestamp()
-                          if r.get(ts_col) is not None else None
-                          for r in ctx_rows]
-            else:
-                ts_ctx = [r.get(ts_col) for r in ctx_rows]
-            rows = ctx_rows + rows
-            ts_vals = ts_ctx + ts_vals
-        matcher = Matcher(spec, rows, ts_vals, w, nav_cap=nav_cap)
-        matcher.match_number = mn
-        matches, consumed = matcher.find_emittable(
-            flush=False, start_at=len(ctx_rows))
-        outs = []
-        for bindings in matches:
-            mn += 1
-            for m in matcher.measure_rows(bindings, mn):
-                if not all_rows_mode:
-                    m = {**dict(zip(part_names, key)), **m}
-                outs.append(m)
-        keep_from = max(0, consumed - prev_span)
+        rows = ctx_rows + rows
+        ts_vals = _cep_times(ctx_rows, ts_col, ts_is_time) + ts_vals
+        matcher = Matcher(spec, rows, ts_vals, w, program=program)
+        outs, mn, consumed = _cep_drive(matcher, mn, key, part_names,
+                                        all_rows_mode, False, len(ctx_rows))
+        keep_from = max(0, consumed - program.prev_span)
         st = {"rows": rows[keep_from:] + held, "mn": mn,
               "ctx": consumed - keep_from}
         if wm is not None:

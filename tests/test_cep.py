@@ -999,7 +999,7 @@ def test_cep_field_negative_index_matches_render_path():
     exactly like the rendered try_element_at path (fieldpath.go:242) —
     before the fix a DEFINE on alerts[-1] silently read NULL every row
     (review r6 #3)."""
-    from streamsql_spark.cep.eval import _field
+    from streamsql_spark.cep.program import _field
     row = {"a": [1, 2, 3], "m": {"k": "v"}}
     assert _field(row, ("a", -1)) == 3
     assert _field(row, ("a", -3)) == 1
@@ -1346,8 +1346,8 @@ def test_java_double_str_matches_jvm_cast(spark):
     import random
     import struct
 
-    from streamsql_spark.cep.eval import (_java_double_str,
-                                          jvm_double_str_is_legacy)
+    from streamsql_spark.dialect.pyeval import (_java_double_str,
+                                                jvm_double_str_is_legacy)
 
     rng = random.Random(8)
     vals = [5e-324, 1e-323, 2 ** -44, 1e23, 0.1, 1 / 3, 0.001, 1e7,

@@ -34,7 +34,7 @@ def _find_both(pattern, pre_cls, n, skip=("past_last_row",),
                ts=None, within=None):
     rows = [{"i": i} for i in range(n)]
     fast = Matcher(_spec(pattern, skip), rows, ts, within, pre_cls=pre_cls)
-    got_fast = fast._find_all_fast(100000)
+    got_fast = fast._find_all_fast()
     assert got_fast is not None, "fast path unexpectedly not applicable"
     generic = Matcher(_spec(pattern, skip), rows, ts, within,
                       pre_cls=pre_cls)

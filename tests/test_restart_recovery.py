@@ -147,23 +147,7 @@ def check(name, sql, batches, split_at, expect_in_phase2, **kw):
     print("CASE_OK\t" + name + "\t" + str(len(base)))
 """
 
-_WINDOW_BODY = r"""
-# ---- counting window: 'a' and 'b' are 2/3 full at the split — the
-# fire in phase 2 sums values from BOTH sides of the restart
-check(
-    "counting",
-    "SELECT k, count(*) AS n, round(sum(v), 4) AS s FROM stream "
-    "GROUP BY k, CountingWindow(3) WITH (TIMESTAMP='ts')",
-    [
-        [{"k": "a", "v": 1.0, "ts": 1}, {"k": "b", "v": 10.0, "ts": 2}],
-        [{"k": "a", "v": 2.0, "ts": 3}, {"k": "b", "v": 20.0, "ts": 4}],
-        [{"k": "a", "v": 4.0, "ts": 5}, {"k": "b", "v": 40.0, "ts": 6}],
-        [{"k": "a", "v": 8.0, "ts": 7}],  # remainder state, no fire
-    ],
-    2,
-    ['"s": 7.0', '"s": 70.0'],  # 1+2+4 and 10+20+40 span the restart
-)
-
+_GLOBAL_TRIGGER_CASE = r"""
 # ---- GLOBAL WINDOW TRIGGER WHEN (FIRE_AND_PURGE): the trigger
 # predicate crosses the restart, then a second accumulation follows
 check(
@@ -182,6 +166,26 @@ check(
     ['"total": 7.0', '"total": 70.0', '"total": 56.0'],
 )
 
+"""
+
+_WINDOW_BODY = r"""
+# ---- counting window: 'a' and 'b' are 2/3 full at the split — the
+# fire in phase 2 sums values from BOTH sides of the restart
+check(
+    "counting",
+    "SELECT k, count(*) AS n, round(sum(v), 4) AS s FROM stream "
+    "GROUP BY k, CountingWindow(3) WITH (TIMESTAMP='ts')",
+    [
+        [{"k": "a", "v": 1.0, "ts": 1}, {"k": "b", "v": 10.0, "ts": 2}],
+        [{"k": "a", "v": 2.0, "ts": 3}, {"k": "b", "v": 20.0, "ts": 4}],
+        [{"k": "a", "v": 4.0, "ts": 5}, {"k": "b", "v": 40.0, "ts": 6}],
+        [{"k": "a", "v": 8.0, "ts": 7}],  # remainder state, no fire
+    ],
+    2,
+    ['"s": 7.0', '"s": 70.0'],  # 1+2+4 and 10+20+40 span the restart
+)
+
+""" + _GLOBAL_TRIGGER_CASE + r"""
 # ---- ALLOWEDLATENESS: [0,10s) fires before the split; the late 8.0
 # arrives AFTER the restart and must re-emit the window with the
 # RECOVERED accumulated partials (3.0,2 -> 11.0,3) and the SAME
@@ -351,17 +355,25 @@ def _run(script: str, timeout: int = 900):
 # shared stdout.
 import pytest
 
+
+def test_restart_recovery_smoke():
+    """Default-tier representative of the slow rig below: the GLOBAL
+    WINDOW TRIGGER WHEN kernel's running-aggregate state crosses a
+    RocksDB checkpoint stop+restart (its own ~1 min subprocess)."""
+    out = _run(_COMMON + _GLOBAL_TRIGGER_CASE + 'print("ALL_OK")\n',
+               timeout=900)
+    assert "CASE_OK\tglobal_trigger\t" in out, out
+
+
 # slow tier (r14): one ~8 min subprocess rig — restart recovery is
 # re-verified opt-in (`-m slow`) after any streaming/state change
-pytestmark = pytest.mark.slow
-
-
 @pytest.fixture(scope="module")
 def recovery_out():
     return _run(_COMMON + _WINDOW_BODY + _ROW_BODY + _HARD_STOP_BODY
                 + _CONF_BODY + _EXTRA_BODY, timeout=1800)
 
 
+@pytest.mark.slow
 def test_restart_recovery_window_kernels(recovery_out):
     """Counting / global-TRIGGER-WHEN / lateness kernels recover from a
     RocksDB checkpoint across a stop+restart with state mid-flight."""
@@ -369,6 +381,7 @@ def test_restart_recovery_window_kernels(recovery_out):
         assert f"CASE_OK\t{case}\t" in recovery_out, (case, recovery_out)
 
 
+@pytest.mark.slow
 def test_restart_recovery_row_kernels(recovery_out):
     """Analytic / CEP / lookup-join stages recover from a RocksDB
     checkpoint across a stop+restart with state mid-flight."""
@@ -376,6 +389,7 @@ def test_restart_recovery_row_kernels(recovery_out):
         assert f"CASE_OK\t{case}\t" in recovery_out, (case, recovery_out)
 
 
+@pytest.mark.slow
 def test_restart_recovery_hard_stop_mid_replay(recovery_out):
     """A hard q.stop() with unprocessed input queued, then restart:
     no fire is lost, none is fabricated (at-least-once sink contract;
@@ -447,6 +461,7 @@ print("ALL_OK")
 """
 
 
+@pytest.mark.slow
 def test_restart_recovery_conf_change_and_lookup_analytic(recovery_out):
     """Shuffle-partition conf change on restart (state stays on the
     checkpoint's pinned partitioning) and a lookup-enriched stateful
@@ -509,6 +524,7 @@ print("ALL_OK")
 """
 
 
+@pytest.mark.slow
 def test_restart_recovery_session_and_cep_horizon(recovery_out):
     """Native session-window state and the CEP reorder-horizon held
     tail both recover from a RocksDB checkpoint across restart."""
