@@ -75,8 +75,7 @@ def _cal_stream(spark) -> float:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from streamsql_spark.catalog import (_fast_ckpt, _reap_ckpt,
-                                         _replay_partitions)
+    from streamsql_spark.catalog import _replay_ckpt, _replay_partitions
 
     in_dir = tempfile.mkdtemp(prefix="cal_stream_in_")
     try:
@@ -94,26 +93,25 @@ def _cal_stream(spark) -> float:
 
         def run_once() -> float:
             name = "cal_stream_" + uuid.uuid4().hex[:8]
-            ckpt = _fast_ckpt("cal_stream_ck_")
-            t0 = time.perf_counter()
-            st = (spark.readStream.schema("k long, v long")
-                  .option("maxFilesPerTrigger", 1).parquet(in_dir))
-            out = st.groupBy("k").applyInPandasWithState(
-                count_kernel, "k long, n long", "n long",
-                "update", GroupStateTimeout.NoTimeout)
-            w = (out.writeStream.format("memory").queryName(name)
-                 .outputMode("update").trigger(availableNow=True))
-            if ckpt is not None:
-                w = w.option("checkpointLocation", ckpt)
-            q = w.start()
-            try:
-                if not q.awaitTermination(300):
-                    q.stop()
-                    raise RuntimeError("cal_stream replay overran 300s")
-                return time.perf_counter() - t0
-            finally:
-                spark.catalog.dropTempView(name)
-                _reap_ckpt(ckpt)
+            with _replay_ckpt("cal_stream_ck_") as ckpt:
+                t0 = time.perf_counter()
+                st = (spark.readStream.schema("k long, v long")
+                      .option("maxFilesPerTrigger", 1).parquet(in_dir))
+                out = st.groupBy("k").applyInPandasWithState(
+                    count_kernel, "k long, n long", "n long",
+                    "update", GroupStateTimeout.NoTimeout)
+                w = (out.writeStream.format("memory").queryName(name)
+                     .outputMode("update").trigger(availableNow=True))
+                if ckpt is not None:
+                    w = w.option("checkpointLocation", ckpt)
+                q = w.start()
+                try:
+                    if not q.awaitTermination(300):
+                        q.stop()
+                        raise RuntimeError("cal_stream replay overran 300s")
+                    return time.perf_counter() - t0
+                finally:
+                    spark.catalog.dropTempView(name)
 
         with _replay_partitions(spark, 8):
             return min(run_once() for _ in range(3))

@@ -176,12 +176,18 @@ class StreamSQL:
         self._metrics = {"input": 0, "input_dropped": 0, "output": 0,
                          "schema_dropped": 0, "stream_out_exact": 0}
         self._queries: list = []  # StreamingQueries started by start_stream
+        # their GetStats totals and listener: from the first
+        # start_stream until stop() (streaming/progress.py)
+        self._progress = None
 
     # ------------------------------------------------------------ compile
     def execute(self, sql: str) -> "StreamSQL":
         if self._plan is not None or self._stmt is not None:
             raise RuntimeError("Execute may be called once per StreamSQL instance")
         self._stmt = parse(sql)
+        # the session zone every in-process compile of this statement
+        # is bound to (dialect/pyeval.py _TZ_GATED), read once here
+        self._zone = self.spark.conf.get("spark.sql.session.timeZone")
         if getattr(self._stmt, "match", None) is not None:
             self._stmt.match.skip_anchor = self.cep_skip_anchor
         # changed_cols(prefix, ignoreNull, "*"): the reference expands
@@ -215,7 +221,7 @@ class StreamSQL:
             # No arrival-stamp priming needed: direct mode never
             # stamps (eligibility requires a window).
             return self
-        self._plan = make_plan(self._stmt)
+        self._plan = make_plan(self._stmt, self._zone)
         self._prime_arrival_stamp()
         return self
 
@@ -279,7 +285,7 @@ class StreamSQL:
                         expanded.append(a)
                 e.args = list(e.args[:2]) + expanded
         self._star_pending = False
-        self._plan = make_plan(self._stmt)
+        self._plan = make_plan(self._stmt, self._zone)
         # the normal execute() path primes arrival stamping right after
         # make_plan — the star-bound path must too, or a star-bound
         # processing-time-window plan loses its monotone wall-clock
@@ -1144,10 +1150,15 @@ class StreamSQL:
         # no registered callbacks → skip the driver-side collect entirely
         # (relevant with sink_path=..., the distributed write path)
         collect_delivery = bool(sinks) and "sink_path" not in kwargs
+        if self._progress is None:
+            from ..streaming.progress import ProgressTotals
+            self._progress = ProgressTotals()
+            self.spark.streams.addListener(self._progress)
         sq = ex.start(self._plan, stream_df,
                       sink=(fanout if sinks else None),
                       on_output=(count_out if collect_delivery else None),
-                      **kwargs)
+                      progress=self._progress, **kwargs)
+        self._progress.watch(sq.id)
         self._queries.append(sq)
         return sq
 
@@ -1339,13 +1350,7 @@ class StreamSQL:
         if cached is None:
             # the gate is a pure function of the compiled plan + the
             # declared schema — decide ONCE, not per event
-            from ..dialect.pyeval import (Fallback, compile_direct,
-                                          set_session_tz)
-            try:
-                set_session_tz(self.spark.conf.get(
-                    "spark.sql.session.timeZone"))
-            except Exception:
-                set_session_tz("")  # unresolvable tz: UTC-gated fns off
+            from ..dialect.pyeval import Fallback, compile_direct
             plan = self._plan
             fn = None
             if not (plan.joins or plan.analytics or plan.distinct
@@ -1355,7 +1360,7 @@ class StreamSQL:
                            for o in plan.outputs)
                     # declared-schema path: typed CASTs belong to Spark
                     or self.schema is not None):
-                fn = (compile_direct(self._stmt)
+                fn = (compile_direct(self._stmt, self._zone)
                       if self._stmt is not None else None)
             cached = self._pyeval_ready = (fn, Fallback)
         fn, Fallback = cached
@@ -1642,16 +1647,6 @@ class StreamSQL:
         from ..dialect import pyeval
         from ..dialect.planner import _default_name
 
-        # every pyeval compile entry point must see the real session
-        # zone BEFORE compiling: the _TZ_GATED gate and the _strict_ts
-        # runtime tripwires key off it (the direct path sets it in
-        # _emit_sync_python; analytic plans never reach that code)
-        try:
-            pyeval.set_session_tz(self.spark.conf.get(
-                "spark.sql.session.timeZone"))
-        except Exception:
-            pyeval.set_session_tz("")  # unresolvable tz: UTC-gated fns off
-
         plan = self._plan
         if (plan.joins or self.schema is not None or plan.distinct
                 or plan.order_by or plan.limit is not None
@@ -1695,7 +1690,7 @@ class StreamSQL:
                 # the output verbatim (container-typed analytics incl.)
                 fn = pyeval.raw_col(e2.parts[0])
             else:
-                fn = pyeval.compile_expr(e2)
+                fn = pyeval.compile_expr(e2, self._zone)
             if fn is None:
                 return None
             outs.append((f.alias or _default_name(f.expr, i), fn))
@@ -1713,7 +1708,7 @@ class StreamSQL:
                 return None
             if bare_value:
                 w = N.IsNull(operand=w, negated=True)
-            where_f = pyeval.compile_expr(w)
+            where_f = pyeval.compile_expr(w, self._zone)
             if where_f is None:
                 return None
 
@@ -1721,7 +1716,7 @@ class StreamSQL:
         specs = []
         for s in plan.analytics:
             over = s.func.over
-            parts = [pyeval.compile_expr(p)
+            parts = [pyeval.compile_expr(p, self._zone)
                      for p in (over.partition_by if over else [])]
             if any(p is None for p in parts):
                 return None
@@ -1733,7 +1728,8 @@ class StreamSQL:
                 # runs against ``ext`` (row + already-stepped
                 # placeholders), so an inner analytic's value is visible
                 when_f = pyeval.compile_expr(
-                    s.when_ast if s.when_ast is not None else over.when)
+                    s.when_ast if s.when_ast is not None else over.when,
+                    self._zone)
                 if when_f is None:
                     return None
             args = []   # ('lit', v) | ('fn', closure)
@@ -1753,7 +1749,7 @@ class StreamSQL:
                     args.append(("fn", pyeval.raw_col(a.parts[0])))
                     arg_marks.append("x")
                 else:
-                    af = pyeval.compile_expr(a)
+                    af = pyeval.compile_expr(a, self._zone)
                     if af is None:
                         return None
                     args.append(("fn", af))
@@ -2163,7 +2159,7 @@ class StreamSQL:
         batches; backpressure channels don't exist on Spark (the engine
         paces sources via maxOffsetsPerTrigger), so retry/expand
         counters are structurally 0."""
-        # Totals come from the incremental accumulator (a session-wide
+        # Totals come from this instance's incremental accumulator (its
         # listener + this synchronous drain, deduped by (runId, batchId)
         # high-water mark) — NOT from re-summing recentProgress, which
         # Spark caps at numRecentProgressUpdates (default 100) entries
@@ -2173,12 +2169,11 @@ class StreamSQL:
         # keeps the observation count, which is taken before the post
         # stage and can exceed rows actually written when the plan has a
         # post-stage LIMIT/DISTINCT.
-        from ..streaming.progress import ingest, totals
         stream_in = stream_out = 0
-        for q in self._queries:
+        for q in (self._queries if self._progress is not None else ()):
             for p in (q.recentProgress or []):
-                ingest(p)
-            t = totals(q.id)
+                self._progress.ingest(p)
+            t = self._progress.totals(q.id)
             stream_in += t["in"]
             stream_out += t["out"]
         m = self._metrics
@@ -2268,6 +2263,9 @@ class StreamSQL:
         self._table_sources.clear()
         self._table_source_meta.clear()
         self._table_source_route.clear()
+        if self._progress is not None:  # release the stream totals
+            self.spark.streams.removeListener(self._progress)
+            self._progress = None
         with self._buffer_cond:  # same lock discipline as the trigger swap
             self._buffer.clear()
             self._history.clear()

@@ -18,6 +18,8 @@ Conventions for oracle parity:
 
 from __future__ import annotations
 
+import tempfile
+from contextlib import nullcontext
 from dataclasses import dataclass
 from typing import Callable
 
@@ -1406,38 +1408,36 @@ _add("streaming_tumbling_replay", Entry(
     "paths"))
 
 
-# staged lateness-replay input dirs, keyed by sf_dir (see
-# _streaming_lateness_run) — removed at interpreter exit
-_LATENESS_STAGED: dict[str, str] = {}
-
-
-def _sweep_lateness_staging() -> None:
+def _events_identity(sf_dir: str) -> tuple:
+    """The events input's file identity: its absolute path and the
+    (name, size, mtime_ns) of every file under it.  An input
+    regenerated in place gets a new identity, so the replay caches
+    keyed by it never serve the old input's state."""
     import os
-    import shutil
 
-    for cache in (_LATENESS_STAGED, _OOO_STAGED):
-        for in_dir in cache.values():
-            shutil.rmtree(os.path.dirname(in_dir), ignore_errors=True)
+    path = os.path.abspath(f"{sf_dir}/events.parquet")
+    files = [path] if os.path.isfile(path) else sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs)
+    return (path, tuple((f, st.st_size, st.st_mtime_ns)
+                        for f in files for st in (os.stat(f),)))
 
 
-import atexit as _atexit  # noqa: E402
-
-_atexit.register(_sweep_lateness_staging)
+# staged lateness-replay inputs, keyed by the events input's identity
+# (see _streaming_lateness_run); a TemporaryDirectory removes its
+# files when dropped from the cache, or at interpreter exit
+_LATENESS_STAGED: dict[tuple, tempfile.TemporaryDirectory] = {}
 
 
 def _staged_events_stream(spark: SparkSession, sf_dir: str,
-                          cache: dict[str, str], prefix: str, build):
+                          cache: dict, prefix: str, build):
     """Shared staging scaffolding of the lateness and out-of-order
-    replays: cache-or-build a staged input dir for ``sf_dir`` (the
-    bench loops each entry 3x), then open it as a
+    replays: cache-or-build a staged input dir for the events input's
+    identity (the bench loops each entry 3x), then open it as a
     ``maxFilesPerTrigger=1`` file stream with the nanos-timestamp
     rewrite.  ``build(raw, nanos_cols, in_dir)`` writes the staged
-    files.  A build failure removes the staging NOW (popping the cache
-    would orphan it — the atexit sweep only sees surviving entries) so
-    the next run rebuilds from scratch.  Returns (raw, nanos_cols,
-    stream)."""
+    files; a build failure removes them so the next run rebuilds from
+    scratch.  Returns (raw, nanos_cols, stream)."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -1446,17 +1446,18 @@ def _staged_events_stream(spark: SparkSession, sf_dir: str,
     path = f"{sf_dir}/events.parquet"
     raw = spark.read.parquet(path)
     nanos_cols = _nanos_timestamp_columns(path)
-    in_dir = cache.get(sf_dir)
-    if in_dir is None or not os.path.isdir(in_dir):
-        root = tempfile.mkdtemp(prefix=prefix)
-        in_dir = f"{root}/in"
+    ident = _events_identity(sf_dir)
+    staged = cache.get(ident)
+    if staged is None or not os.path.isdir(f"{staged.name}/in"):
+        _drop_staging(cache, sf_dir)  # staged from an older input
+        staged = tempfile.TemporaryDirectory(prefix=prefix)
         try:
-            build(raw, nanos_cols, in_dir)
+            build(raw, nanos_cols, f"{staged.name}/in")
         except BaseException:
-            import shutil
-            shutil.rmtree(root, ignore_errors=True)
+            staged.cleanup()
             raise
-        cache[sf_dir] = in_dir
+        cache[ident] = staged
+    in_dir = f"{staged.name}/in"
     stream = (spark.readStream.schema(raw.schema)
               .option("maxFilesPerTrigger", 1)
               .option("recursiveFileLookup", "true").parquet(in_dir))
@@ -1466,29 +1467,28 @@ def _staged_events_stream(spark: SparkSession, sf_dir: str,
     return raw, nanos_cols, stream
 
 
-def _drop_staging(cache: dict[str, str], sf_dir: str) -> None:
-    """Failure after staging (query construction/run): remove the
-    staged dir so the next run rebuilds from scratch."""
+def _drop_staging(cache: dict, sf_dir: str) -> None:
+    """Remove every staged dir of ``sf_dir``'s events input (a failed
+    run, or an input regenerated since staging) so the next run
+    rebuilds from scratch."""
     import os
-    import shutil
 
-    staged = cache.pop(sf_dir, None)
-    if staged is not None:
-        shutil.rmtree(os.path.dirname(staged), ignore_errors=True)
+    path = os.path.abspath(f"{sf_dir}/events.parquet")
+    for k in [k for k in cache if k[0] == path]:
+        cache.pop(k).cleanup()
 
 
 # distinct state-key counts of the replay inputs, memoized per
-# (sf_dir, key exprs) — a TABLE STATISTIC in the filesourcePartition-
-# cache sense (guide §6), never a query result: every replay still
-# computes from the parquet input; this only sizes its state
-# partitioning.  First bench rep of an entry pays the one count job.
+# (events input identity, key exprs) — a TABLE STATISTIC in the
+# filesourcePartition-cache sense (guide §6), never a query result:
+# every replay still computes from the parquet input; this only sizes
+# its state partitioning.  First bench rep of an entry pays the one
+# count job.
 _REPLAY_KEYS: dict[tuple, int] = {}
 
 
 def _replay_key_count(spark, sf_dir: str, exprs: tuple[str, ...]) -> int:
-    import os as _os
-
-    key = (_os.path.abspath(sf_dir), exprs)
+    key = (_events_identity(sf_dir), exprs)
     n = _REPLAY_KEYS.get(key)
     if n is None:
         ev = load_tables(spark, sf_dir)["events"]
@@ -1498,7 +1498,7 @@ def _replay_key_count(spark, sf_dir: str, exprs: tuple[str, ...]) -> int:
 
 
 def _replay_parts_for(spark, sf_dir: str, key_exprs: tuple[str, ...],
-                      keys_per_partition: int | None = None) -> int:
+                      keys_per_partition: int = 200) -> int:
     """State-partition count for a replay, derived from its STATE-KEY
     CARDINALITY and bounded by cluster width:
 
@@ -1507,17 +1507,12 @@ def _replay_parts_for(spark, sf_dir: str, key_exprs: tuple[str, ...],
     ``keys_per_partition`` is the amortization constant — how many
     keys' state one partition's per-trigger lifecycle is worth; the
     default 200 reproduces the r13 sweep optimum (1500 user_id keys →
-    8 partitions) and is conf-able via SPARK_GRAFT_REPLAY_KEYS_PER_PART
-    for deployments where the per-trigger fixed cost differs (a
-    compute-bound python kernel amortizes at ~100 — see the analytic
-    replay).  At production cardinalities (10^8 keys) the width bound
-    governs and the result is the cluster's own parallelism."""
+    8 partitions); a compute-bound python kernel amortizes at ~100
+    (see the analytic replay).  At production cardinalities (10^8
+    keys) the width bound governs and the result is the cluster's own
+    parallelism."""
     import math as _math
-    import os as _os
 
-    if keys_per_partition is None:
-        keys_per_partition = int(_os.environ.get(
-            "SPARK_GRAFT_REPLAY_KEYS_PER_PART", "200"))
     keys = _replay_key_count(spark, sf_dir, key_exprs)
     width = spark.sparkContext.defaultParallelism
     return max(2, min(_math.ceil(keys / keys_per_partition), width))
@@ -1549,50 +1544,22 @@ class _replay_partitions:
         return False
 
 
-_EPHEMERAL_CKPTS: list[str] = []
-
-
-def _fast_ckpt(prefix: str) -> str | None:
-    """Fresh RAM-backed checkpoint dir for a multi-micro-batch replay:
-    Spark's default temp checkpoint lives under /tmp (ext4 here) and
-    the metadata log fsyncs offsets/commits EVERY micro-batch, so a
+def _replay_ckpt(prefix: str):
+    """Context manager over a fresh RAM-backed checkpoint dir for one
+    multi-micro-batch replay, removed when the block exits: Spark's
+    default temp checkpoint lives under /tmp (ext4 here) and the
+    metadata log fsyncs offsets/commits EVERY micro-batch, so a
     4-trigger replay pays ~4x32-partition state commits to spinning
-    metadata — a harness concern only (production checkpoints belong on
-    durable storage).  Swept at exit; None → Spark default."""
-    import tempfile
-
+    metadata — a harness concern only (production checkpoints belong
+    on durable storage).  Yields None (Spark's default) without a
+    writable tmpfs."""
     from .streaming.harness import _fast_tmp_root
 
     root = _fast_tmp_root()
     if root is None:
-        return None
-    d = tempfile.mkdtemp(prefix=prefix, dir=root)
-    _EPHEMERAL_CKPTS.append(d)
-    return d
-
-
-def _reap_ckpt(d: str | None) -> None:
-    """Remove a replay's checkpoint as soon as its query finishes —
-    fresh per run and never reused, so leaving them to the atexit
-    sweep would pile streaming state in tmpfs across bench reps."""
-    import shutil
-
-    if d is not None:
-        shutil.rmtree(d, ignore_errors=True)
-        try:
-            _EPHEMERAL_CKPTS.remove(d)
-        except ValueError:
-            pass
-
-
-def _sweep_ephemeral_ckpts() -> None:
-    import shutil
-
-    for d in _EPHEMERAL_CKPTS:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-_atexit.register(_sweep_ephemeral_ckpts)
+        return nullcontext()
+    return tempfile.TemporaryDirectory(prefix=prefix, dir=root,
+                                       ignore_cleanup_errors=True)
 
 
 def _await_replay(sq, seconds: int = 300) -> None:
@@ -1770,7 +1737,8 @@ def _streaming_cep_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     with _replay_partitions(
-            spark, _replay_parts_for(spark, sf_dir, ("user_id",))):
+            spark, _replay_parts_for(spark, sf_dir, ("user_id",))), \
+            _replay_ckpt("ssql_cep_ooo_ckpt_") as ooo_ckpt:
         q = StreamSQL(spark).execute(_CEP_ADJ_SQL)
         out = q.query_stream(_events_stream(spark, sf_dir))
         _drop_stale_stream_views(spark, "streaming_cep_")
@@ -1780,8 +1748,8 @@ def _streaming_cep_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         # kind='ooo' leg runs concurrently on the shared local scheduler
         try:
-            ooo_acc, ooo_sq, ooo_ckpt = _streaming_cep_ooo_start(
-                spark, sf_dir)
+            ooo_acc, ooo_sq = _streaming_cep_ooo_start(
+                spark, sf_dir, ooo_ckpt)
         except BaseException:
             # staging/start failed with the inorder query already
             # running — stop it or it contends with the next entry
@@ -1802,8 +1770,6 @@ def _streaming_cep_run(spark: SparkSession, sf_dir: str) -> DataFrame:
                 except Exception:  # noqa: BLE001 — already failing
                     pass
             raise
-        finally:
-            _reap_ckpt(ooo_ckpt)
     base = spark.table(name)
     ooo = spark.createDataFrame(
         [(r["user_id"], r["a_ts"], r["b_ts"], r["a_val"], r["b_val"])
@@ -1828,7 +1794,7 @@ _CEP_ADJ_SQL = """
     )
 """
 
-_OOO_STAGED: dict[str, str] = {}
+_OOO_STAGED: dict[tuple, tempfile.TemporaryDirectory] = {}
 # 3 delivery buckets + 1 closer batch = 4 micro-batches: enough to
 # displace rows ACROSS micro-batch boundaries (the property under
 # test — the ±120s displacement bound is independent of bucket count)
@@ -1837,7 +1803,8 @@ _OOO_BATCHES = 3
 _OOO_KEY_PRED = "user_id % 7 = 0"
 
 
-def _streaming_cep_ooo_start(spark: SparkSession, sf_dir: str):
+def _streaming_cep_ooo_start(spark: SparkSession, sf_dir: str,
+                             ckpt: str | None):
     """Start the out-of-order delivery leg of ``streaming_cep_replay``:
     the same MATCH_RECOGNIZE query under a declared
     ``MAXOUTOFORDERNESS='5m'`` reorder horizon (streaming/stateful.py
@@ -1855,8 +1822,8 @@ def _streaming_cep_ooo_start(spark: SparkSession, sf_dir: str):
     (NULL value — can never satisfy a DEFINE) 2h past max event time
     that pushes every key's watermark over its held tail.
 
-    Staging is one partitionBy write job, cached per sf_dir (the bench
-    loops entries 3x)."""
+    Staging is one partitionBy write job, cached per events input (the
+    bench loops entries 3x); ``ckpt`` is the leg's checkpoint dir."""
     import os
     import time as _time
     import uuid as _uuid
@@ -1920,11 +1887,10 @@ def _streaming_cep_ooo_start(spark: SparkSession, sf_dir: str):
             _CEP_ADJ_SQL
             + " WITH (TIMESTAMP='ts', MAXOUTOFORDERNESS='5m')")
         acc: list[dict] = []
-        ckpt = _fast_ckpt("ssql_cep_ooo_ckpt_")
         sq = q.start_stream(stream, sink=lambda rows: acc.extend(rows),
                             query_name="cep_ooo_" + _uuid.uuid4().hex[:8],
                             checkpoint=ckpt)
-        return acc, sq, ckpt
+        return acc, sq
     except BaseException:
         _drop_staging(_OOO_STAGED, sf_dir)
         raise
@@ -1993,7 +1959,7 @@ def _streaming_lateness_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = f"{sf_dir}/events.parquet"
 
     # the staged input dir (source symlink + two flush batches) is a
-    # pure function of sf_dir — build it once and reuse across repeat
+    # pure function of the events input — build it once and reuse across repeat
     # runs (the bench loops each entry 3×; rewriting the flush parquet
     # every run costs two write jobs + an agg job per rep)
     def build(raw, nanos_cols, in_dir):
@@ -2028,18 +1994,15 @@ def _streaming_lateness_run(spark: SparkSession, sf_dir: str) -> DataFrame:
                   ALLOWEDLATENESS='2h')
         """)
         acc: list[dict] = []
-        ckpt = _fast_ckpt("ssql_lateness_ckpt_")
         n_parts = _replay_parts_for(spark, sf_dir, (
             "event_type", "CAST(unix_timestamp(ts) DIV 21600 AS BIGINT)"))
-        with _replay_partitions(spark, n_parts):
-            try:
-                sq = q.start_stream(
-                    stream, sink=lambda rows: acc.extend(rows),
-                    query_name="lateness_" + _uuid.uuid4().hex[:8],
-                    checkpoint=ckpt)
-                _await_replay(sq)
-            finally:
-                _reap_ckpt(ckpt)
+        with _replay_partitions(spark, n_parts), \
+                _replay_ckpt("ssql_lateness_ckpt_") as ckpt:
+            sq = q.start_stream(
+                stream, sink=lambda rows: acc.extend(rows),
+                query_name="lateness_" + _uuid.uuid4().hex[:8],
+                checkpoint=ckpt)
+            _await_replay(sq)
         return spark.createDataFrame(
             [(r["event_type"], r["cnt"], r["total"], r["ws"]) for r in acc
              if r["event_type"] != "__flush__"],

@@ -544,17 +544,22 @@ def _run_text_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.text import ppl_buckets, register_persisted
     from .session import ensure_parallelism
     base = ensure_parallelism(docs.select("doc_id", "text")).persist()
-    feat = fingerprint(token_counts(quality_features(language_id(base))))
-    feat = linear_quality_score(feat, _CLF_WEIGHTS, bias=_CLF_BIAS)
-    # CCNet-style perplexity under a bigram LM self-trained on the
-    # corpus (merged r4): every gram is in-model, so the score is a
-    # deterministic function of the counts on both engines
-    uni, big, v = ngram_lm_fit(base)
-    feat = perplexity_score(feat, uni, big, v)
-    # head/middle/tail cut (merged r5): exact percentiles here so the
-    # DuckDB quantile_cont replica hash-matches — the row-guard bounds
-    # the holistic aggregate; at corpus scale the approx default applies
-    feat = ppl_buckets(feat, exact=True, probe_df=docs)
+    try:
+        feat = fingerprint(token_counts(quality_features(language_id(base))))
+        feat = linear_quality_score(feat, _CLF_WEIGHTS, bias=_CLF_BIAS)
+        # CCNet-style perplexity under a bigram LM self-trained on the
+        # corpus (merged r4): every gram is in-model, so the score is a
+        # deterministic function of the counts on both engines
+        uni, big, v = ngram_lm_fit(base)
+        feat = perplexity_score(feat, uni, big, v)
+        # head/middle/tail cut (merged r5): exact percentiles here so
+        # the DuckDB quantile_cont replica hash-matches — the row-guard
+        # bounds the holistic aggregate; at corpus scale the approx
+        # default applies
+        feat = ppl_buckets(feat, exact=True, probe_df=docs)
+    except BaseException:
+        base.unpersist()  # not registered yet: nothing else frees it
+        raise
     register_persisted(base)
     return feat.select(
         "doc_id", "lang_pred", "lang_score",

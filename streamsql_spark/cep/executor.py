@@ -385,7 +385,8 @@ def execute_cep(spark: SparkSession, plan, source_df: DataFrame, executor) -> Da
     drop_null_ts = parts["drop_null_ts"]
     order_cols = parts["order_cols"]
     all_rows = spec.rows_per_match == "all"
-    program = Program(spec)  # compiled once; the closures ship by value
+    # compiled once; the closures ship by value
+    program = Program(spec, plan.zone)
 
     names = [f.name for f in out_schema.fields]
 

@@ -146,10 +146,13 @@ def alphabet(spec: N.MatchSpec) -> frozenset:
 class Program:
     """One statement's DEFINE and MEASURES as compiled closures over a
     :class:`MatchView`.  Built once per statement on the driver and
-    shipped to the kernels; ``nav_cap`` is the streaming MAXNAVOFFSET
-    (None = unbounded)."""
+    shipped to the kernels; ``zone`` is the session time zone the
+    statement was planned under (``plan.zone``), ``nav_cap`` the
+    streaming MAXNAVOFFSET (None = unbounded)."""
 
-    def __init__(self, spec: N.MatchSpec, nav_cap: int | None = None):
+    def __init__(self, spec: N.MatchSpec, zone: str = "UTC",
+                 nav_cap: int | None = None):
+        self.zone = zone
         self.subsets = {k: frozenset(v) for k, v in spec.subsets.items()}
         self.nav_cap = nav_cap
         self.alphabet = alphabet(spec)
@@ -186,12 +189,12 @@ class Program:
         self.defines = {
             sym: compile_strict(
                 N.Bin("AND", self._rewrite(cond), N.Lit(True)),
-                f"DEFINE {sym} AS {sql_text(cond)}")
+                f"DEFINE {sym} AS {sql_text(cond)}", zone)
             for sym, cond in spec.defines.items()}
         self.measures = [
             (m.alias or f"m{j}",
              compile_strict(self._rewrite(m.expr),
-                            f"MEASURES {sql_text(m.expr)}"))
+                            f"MEASURES {sql_text(m.expr)}", zone))
             for j, m in enumerate(spec.measures)]
 
     # ------------------------------------------------------------ leaves
@@ -214,7 +217,8 @@ class Program:
         return N.transform(e, lambda n: n, pre=self._leaf)
 
     def _sub(self, e: N.Expr, what: str):
-        return compile_strict(self._rewrite(e), f"{what} {sql_text(e)}")
+        return compile_strict(self._rewrite(e), f"{what} {sql_text(e)}",
+                              self.zone)
 
     def _leaf(self, e: N.Expr):
         """A Slot for a match-dependent node, else None (descend)."""

@@ -61,8 +61,9 @@ def _default_name(e: N.Expr, i: int) -> str:
 
 
 class Planner:
-    def __init__(self, stmt: N.SelectStmt):
+    def __init__(self, stmt: N.SelectStmt, zone: str):
         self.stmt = stmt
+        self.zone = zone
         self.agg_specs: list[AggSpec] = []
         self.analytics: list[AnalyticSpec] = []
         self._agg_by_sql: dict[str, str] = {}
@@ -291,7 +292,7 @@ class Planner:
                 from ..operators.global_window import Trigger
                 from .pyeval import ExprError
                 try:  # compiled once; both GLOBAL WINDOW kernels run it
-                    self.trigger = Trigger(w.trigger_when)
+                    self.trigger = Trigger(w.trigger_when, self.zone)
                 except ExprError as exc:
                     raise PlanError(str(exc)) from None
             if w.kind == "counting" and not isinstance(w.count, int):
@@ -324,7 +325,7 @@ class Planner:
             # which join-ref flattening and lookup rewrites change
             # after planning (and streaming adds its MAXNAVOFFSET cap)
             try:
-                Program(stmt.match)
+                Program(stmt.match, self.zone)
             except ExprError as exc:
                 raise PlanError(str(exc)) from None
         else:
@@ -350,6 +351,7 @@ class Planner:
             distinct=stmt.distinct,
             options=dict(stmt.with_opts),
             trigger=self.trigger,
+            zone=self.zone,
         )
         ts_field = stmt.with_opts.get("TIMESTAMP")
         if ts_field:
@@ -593,5 +595,7 @@ class Planner:
             plan.order_by.append((render(e), asc))
 
 
-def plan(stmt: N.SelectStmt) -> QueryPlan:
-    return Planner(stmt).plan()
+def plan(stmt: N.SelectStmt, zone: str = "UTC") -> QueryPlan:
+    """Plan ``stmt`` for a session whose ``spark.sql.session.timeZone``
+    is ``zone`` (the in-process expression compiles depend on it)."""
+    return Planner(stmt, zone).plan()

@@ -83,17 +83,29 @@ def sql_text(e: N.Expr) -> str:
         return type(e).__name__
 
 
-def compile_strict(e: N.Expr, what: str):
+def compile_expr(e: N.Expr, zone: str):
+    """AST → ``fn(row) -> value`` for a session whose time zone is
+    ``zone``; None when the node kind (or any child) is outside the
+    supported subset, or calls a ``_TZ_GATED`` function while ``zone``
+    is not UTC."""
+    if zone != "UTC" and _reads_zone(e):
+        return None
+    return _compile(e)
+
+
+def compile_strict(e: N.Expr, what: str, zone: str):
     """``compile_expr`` for the callers without a Spark path: an
     uncompilable expression raises :class:`ExprError` now, and a
     runtime :class:`Fallback` raises it per row.  ``what`` names the
     expression in the message (e.g. ``"DEFINE A AS v > 1"``).  This is
     the only place the core treats its callers differently."""
-    fn = compile_expr(N.transform(e, _jvm_float_args))
+    fn = compile_expr(N.transform(e, _jvm_float_args), zone)
     if fn is None:
+        why = (f"time-zone functions need a UTC session zone, not {zone!r}"
+               if zone != "UTC" and _reads_zone(e)
+               else "the emit_sync pyeval surface")
         raise ExprError(
-            f"{what} is outside the in-process expression subset (the "
-            "emit_sync pyeval surface)")
+            f"{what} is outside the in-process expression subset ({why})")
 
     def strict(row):
         try:
@@ -113,7 +125,7 @@ def _jvm_float_args(e: N.Expr) -> N.Expr:
     JVM, so float arguments arrive pre-formatted in Java layout."""
     if not (isinstance(e, N.Func) and e.name.lower() == "concat"):
         return e
-    fns = [compile_expr(a) for a in e.args]
+    fns = [_compile(a) for a in e.args]
     if any(f is None for f in fns):
         return e  # the enclosing compile reports it
 
@@ -718,28 +730,12 @@ def _fn_is_numeric(v):
     return False
 
 
-# ------------------------------------------------ session context
-# effective ``spark.sql.session.timeZone``, set by the facade before
-# the first compile.  The time-of-day family (now/current_date/...)
-# and epoch formatting only answer under UTC — the get_spark default
-# (session.py) — because any other zone would require the JVM and
-# Python tzdata to agree, an unverifiable bar; non-UTC sessions take
-# the Spark path.
-_SESSION_TZ = "UTC"
-
-
-def set_session_tz(tz: str) -> None:
-    global _SESSION_TZ
-    _SESSION_TZ = tz or "unknown"  # unresolvable: UTC-gated fns off
-
-
-# functions whose Spark semantics read the session timezone: compile
-# REFUSES them under a non-UTC zone (a statement compiled under one
-# facade must not start answering because a different facade later set
-# the process-wide tz back to UTC), and the runtime gates stay as a
-# tripwire for the reverse flip.  Known limit: mutating
-# spark.sql.session.timeZone between a facade's compile and its later
-# events is not re-detected — use a fresh StreamSQL after a tz change.
+# ------------------------------------------------ session time zone
+# functions whose Spark semantics read ``spark.sql.session.timeZone``:
+# every compile entry point takes the caller's zone and compiles them
+# only under UTC (the get_spark default, session.py) — any other zone
+# would need the JVM and Python tzdata to agree, an unverifiable bar.
+# A zone changed after compiling is not re-detected.
 _TZ_GATED = frozenset(
     {"now", "current_date", "current_time", "unix_timestamp",
      "from_unixtime", "to_seconds", "day", "dayofweek", "dayofyear",
@@ -747,20 +743,22 @@ _TZ_GATED = frozenset(
      "date_sub", "date_diff", "date_format", "date_parse", "extract"})
 
 
+def _reads_zone(e: N.Expr) -> bool:
+    """True when ``e`` calls a function of the ``_TZ_GATED`` family."""
+    return any(isinstance(n, N.Func) and n.name.lower() in _TZ_GATED
+               for n in N.walk(e))
+
+
 def _utc_now():
-    """Wall clock in session time (UTC-gated).  now()/current_* are
-    NONDETERMINISTIC: the parity bar here is type + clock source, not
+    """Wall clock in session time (UTC only, _TZ_GATED).  now()/current_*
+    are NONDETERMINISTIC: the parity bar here is type + clock source, not
     value-identity with a Spark evaluation at a different instant —
     the reference evaluates them in-process the same way
     (functions_datetime.go now/current_*)."""
-    if _SESSION_TZ != "UTC":
-        raise Fallback()
     return _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
 
 
 def _fn_unix_timestamp():
-    if _SESSION_TZ != "UTC":
-        raise Fallback()
     return int(_time.time())
 
 
@@ -772,8 +770,6 @@ def _fn_from_unixtime(v):
     platform-dependent)."""
     if v is None:
         return None
-    if _SESSION_TZ != "UTC":
-        raise Fallback()
     if isinstance(v, bool) or not isinstance(v, int):
         raise Fallback()
     try:
@@ -968,14 +964,12 @@ def _strict_ts(v):
     shapes whose acceptance is mode-independent.  Everything else
     (T separators, zone suffixes, partial times, single-digit fields,
     out-of-range dates — ANSI raises where legacy NULLs) falls back.
-    UTC-gated: in a DST zone a wall-clock string can be nonexistent or
-    ambiguous and Spark shifts it, so every consumer (field extractors,
-    date arithmetic, formatting) is only wall==instant-safe under a
-    fixed-offset session zone."""
+    Its consumers compile for UTC sessions only (_TZ_GATED): in a DST
+    zone a wall-clock string can be nonexistent or ambiguous and Spark
+    shifts it, so field extractors, date arithmetic and formatting are
+    only wall==instant-safe under a fixed-offset session zone."""
     if v is None:
         return None
-    if _SESSION_TZ != "UTC":
-        raise Fallback()
     if not isinstance(v, str):
         raise Fallback()
     m = _STRICT_TS_RE.fullmatch(v)
@@ -1000,7 +994,7 @@ def _fn_to_seconds(v):
     """to_seconds → unix_timestamp(CAST(x AS TIMESTAMP)): epoch micros
     divided by 1e6 with JAVA integer division — truncation toward
     ZERO, not floor (measured: '1969-12-31 23:59:59.5' → 0, where
-    floor would give -1).  UTC-gated by _strict_ts."""
+    floor would give -1).  UTC sessions only (_TZ_GATED)."""
     d = _strict_ts(v)
     if d is None:
         return None
@@ -1040,7 +1034,7 @@ def _compile_date_addsub(e: "N.Func", sign: int):
     if not 2 <= len(e.args) <= 3:
         return None
     unit = _ts_unit(e.args[2]) if len(e.args) > 2 else "DAY"
-    vf, nf = compile_expr(e.args[0]), compile_expr(e.args[1])
+    vf, nf = _compile(e.args[0]), _compile(e.args[1])
     if vf is None or nf is None:
         return None
     unit_us = _UNIT_US.get(unit)
@@ -1079,7 +1073,7 @@ def _compile_date_diff(e: "N.Func"):
     unit_us = _UNIT_US.get(unit)
     if unit_us is None:
         return None
-    af, bf = compile_expr(e.args[0]), compile_expr(e.args[1])
+    af, bf = _compile(e.args[0]), _compile(e.args[1])
     if af is None or bf is None:
         return None
 
@@ -1145,7 +1139,7 @@ def _compile_date_format(e: "N.Func"):
     parts = _parse_java_pattern(go_format_to_java(pat))
     if parts is None:
         return None
-    vf = compile_expr(e.args[0])
+    vf = _compile(e.args[0])
     if vf is None:
         return None
 
@@ -1183,7 +1177,7 @@ def _compile_date_parse(e: "N.Func"):
                  if kind == "f" else re.escape(lit)
                  for kind, lit in parts)
     pat_re = re.compile(rx)
-    vf = compile_expr(e.args[0])
+    vf = _compile(e.args[0])
     if vf is None:
         return None
 
@@ -1191,8 +1185,6 @@ def _compile_date_parse(e: "N.Func"):
         v = vf(row)
         if v is None:
             return None
-        if _SESSION_TZ != "UTC":
-            raise Fallback()
         if not isinstance(v, str):
             raise Fallback()
         m = pat_re.fullmatch(v)
@@ -1226,7 +1218,7 @@ def _compile_extract(e: "N.Func"):
     fld = flds.get(unit)
     if fld is None:
         return None  # renderer raises at render time — Spark path owns
-    vf = compile_expr(e.args[1])
+    vf = _compile(e.args[1])
     if vf is None:
         return None
 
@@ -1249,7 +1241,7 @@ def _compile_split(e: "N.Func"):
     if not (isinstance(sep, N.Lit) and isinstance(sep.value, str)
             and sep.value):
         return None
-    vf = compile_expr(e.args[0])
+    vf = _compile(e.args[0])
     if vf is None:
         return None
     sepv = sep.value
@@ -1277,7 +1269,7 @@ def _compile_array_len(e: "N.Func"):
     if not (isinstance(a0, N.Func) and a0.name.lower() in _ARRAY_FUNCS):
         return None
 
-    vf = compile_expr(a0)
+    vf = _compile(a0)
 
     def f(row):
         v = vf(row)
@@ -1313,7 +1305,7 @@ def _compile_encode_decode(lname: str, e: "N.Func"):
     fmt = (_lit_str(e.args[1]) or "").lower()
     if fmt not in ("base64", "hex"):
         return None
-    vf = compile_expr(e.args[0])
+    vf = _compile(e.args[0])
     if vf is None:
         return None
     enc = lname == "encode"
@@ -1391,7 +1383,7 @@ def _compile_regexp_substring(e: "N.Func"):
         rx = re.compile(pat)
     except re.error:
         return None  # Java may accept what Python rejects: Spark path
-    vf = compile_expr(e.args[0])
+    vf = _compile(e.args[0])
     if vf is None:
         return None
 
@@ -1442,7 +1434,7 @@ def _compile_format(e: "N.Func"):
     format_string('%.{d}f', CAST(v AS DOUBLE)) with the digit count
     read from the literal pattern (default 2, '0' → 0)."""
     if len(e.args) == 1:
-        vf = compile_expr(e.args[0])
+        vf = _compile(e.args[0])
         if vf is None:
             return None
         caster = _CASTERS["string"]
@@ -1454,7 +1446,7 @@ def _compile_format(e: "N.Func"):
     digits = format_digits(
         pa.value if isinstance(pa, N.Lit) and isinstance(pa.value, str)
         else None)
-    vf = compile_expr(e.args[0])
+    vf = _compile(e.args[0])
     if vf is None:
         return None
 
@@ -1489,7 +1481,7 @@ def _compile_array_val(e):
             return row[name]
 
         return acc
-    return compile_expr(e)
+    return _compile(e)
 
 
 def _scalar_array(v):
@@ -1547,7 +1539,7 @@ def _compile_array_fn(lname: str, e: "N.Func"):
     if two:
         bf = (_compile_array_val(e.args[1])
               if lname in ("array_union", "array_intersect",
-                           "array_except") else compile_expr(e.args[1]))
+                           "array_except") else _compile(e.args[1]))
         if bf is None:
             return None
 
@@ -1662,7 +1654,7 @@ def _compile_custom_scalar(lname: str, e: "N.Func"):
     HANDOFF: scalar args only (container representation differs by UDF
     mode), exact result-type match (``_udf_result``), and a raising UDF
     re-routes to the Spark path, which owns error surfacing."""
-    args = [compile_expr(a) for a in e.args]
+    args = [_compile(a) for a in e.args]
     if any(a is None for a in args):
         return None
     from ..functions.registry import custom_scalar
@@ -1775,7 +1767,7 @@ _FNS: dict[str, object] = {
     "json_type": _fn_json_type,
     "json_length": _fn_json_length,
     "from_json": _fn_from_json,
-    # datetime (r10; UTC-gated — see _SESSION_TZ)
+    # datetime (r10; UTC sessions only — see _TZ_GATED)
     "from_unixtime": _fn_from_unixtime,
     "now": _utc_now,
     "current_date": lambda: _utc_now().date(),
@@ -1976,7 +1968,7 @@ def _compile_json_extract(e: N.Func):
     segs = _parse_jpath(path)
     if segs is None:
         return None
-    vf = compile_expr(e.args[0])
+    vf = _compile(e.args[0])
     if vf is None:
         return None
 
@@ -2017,9 +2009,8 @@ def _compile_json_extract(e: N.Func):
     return jx
 
 
-def compile_expr(e: N.Expr):
-    """AST → ``fn(row) -> value``; None when the node kind (or any
-    child) is outside the supported subset."""
+def _compile(e: N.Expr):
+    """:func:`compile_expr` below the session-zone check."""
     if isinstance(e, Slot):
         return e.fn
     if isinstance(e, N.Lit):
@@ -2047,7 +2038,7 @@ def compile_expr(e: N.Expr):
             return v
         return col
     if isinstance(e, N.Bin):
-        lf, rf = compile_expr(e.left), compile_expr(e.right)
+        lf, rf = _compile(e.left), _compile(e.right)
         if lf is None or rf is None:
             return None
         op = e.op.upper()
@@ -2066,7 +2057,7 @@ def compile_expr(e: N.Expr):
             return lambda row: _concat_op(lf(row), rf(row))
         return None
     if isinstance(e, N.Un):
-        f = compile_expr(e.operand)
+        f = _compile(e.operand)
         if f is None:
             return None
         if e.op.upper() == "NOT":
@@ -2078,7 +2069,7 @@ def compile_expr(e: N.Expr):
             return lambda row: None if f(row) is None else _i64(-_num(f(row)))
         return None
     if isinstance(e, N.Like):
-        f = compile_expr(e.operand)
+        f = _compile(e.operand)
         if f is None or not isinstance(e.pattern, N.Lit) \
                 or not isinstance(e.pattern.value, str):
             return None
@@ -2095,14 +2086,14 @@ def compile_expr(e: N.Expr):
             return (not hit) if neg else hit
         return like
     if isinstance(e, N.IsNull):
-        f = compile_expr(e.operand)
+        f = _compile(e.operand)
         if f is None:
             return None
         neg = e.negated
         return lambda row: (f(row) is not None) if neg else (f(row) is None)
     if isinstance(e, N.InList):
-        f = compile_expr(e.operand)
-        items = [compile_expr(i) for i in e.items]
+        f = _compile(e.operand)
+        items = [_compile(i) for i in e.items]
         if f is None or any(i is None for i in items):
             return None
         neg = e.negated
@@ -2119,8 +2110,8 @@ def compile_expr(e: N.Expr):
             return (not hit) if neg else hit
         return inlist
     if isinstance(e, N.Between):
-        f, lo, hi = (compile_expr(e.operand), compile_expr(e.low),
-                     compile_expr(e.high))
+        f, lo, hi = (_compile(e.operand), _compile(e.low),
+                     _compile(e.high))
         if f is None or lo is None or hi is None:
             return None
         neg = e.negated
@@ -2133,16 +2124,16 @@ def compile_expr(e: N.Expr):
             return (not v) if neg else v
         return between
     if isinstance(e, N.Case):
-        op_f = compile_expr(e.operand) if e.operand is not None else None
+        op_f = _compile(e.operand) if e.operand is not None else None
         if e.operand is not None and op_f is None:
             return None
         whens = []
         for c, v in e.whens:
-            cf, vf = compile_expr(c), compile_expr(v)
+            cf, vf = _compile(c), _compile(v)
             if cf is None or vf is None:
                 return None
             whens.append((cf, vf))
-        else_f = compile_expr(e.else_) if e.else_ is not None else None
+        else_f = _compile(e.else_) if e.else_ is not None else None
         if e.else_ is not None and else_f is None:
             return None
 
@@ -2171,12 +2162,7 @@ def compile_expr(e: N.Expr):
         if lname in _registry._CUSTOM_ANALYTICS:
             return None  # runtime-registered analytic wins (stateful)
         if lname in _registry._CUSTOM_SCALARS:
-            if lname in _registry.SCALAR_RENDERERS \
-                    or lname in _registry.AGG_RENDERERS:
-                # a custom registration shadowed by a dialect renderer:
-                # which one the rendered SQL resolves to is the Spark
-                # path's business — don't guess
-                return None
+            # never a dialect builtin name (registry._check_custom_name)
             return _compile_custom_scalar(lname, e)
         if lname == "case_when":
             # the renderer pairs args WHEN/THEN with a trailing ELSE
@@ -2186,7 +2172,7 @@ def compile_expr(e: N.Expr):
                 return None
             pairs = list(zip(e.args[0::2], e.args[1::2]))
             else_ = e.args[-1] if len(e.args) % 2 == 1 else None
-            return compile_expr(
+            return _compile(
                 N.Case(operand=None, whens=pairs, else_=else_))
         if lname == "cast":
             # the renderer (registry._render_cast) reads the TYPE from
@@ -2202,12 +2188,10 @@ def compile_expr(e: N.Expr):
             caster = _CASTERS.get(tname)
             if caster is None:
                 return None
-            vf = compile_expr(e.args[0])
+            vf = _compile(e.args[0])
             if vf is None:
                 return None
             return lambda row: caster(vf(row))
-        if lname in _TZ_GATED and _SESSION_TZ != "UTC":
-            return None  # see _TZ_GATED — non-UTC session at compile
         if lname == "json_extract":
             return _compile_json_extract(e)
         if lname == "extract":
@@ -2252,7 +2236,7 @@ def compile_expr(e: N.Expr):
             if not (isinstance(d, N.Lit) and isinstance(d.value, int)
                     and not isinstance(d.value, bool)):
                 return None
-        args = [compile_expr(a) for a in e.args]
+        args = [_compile(a) for a in e.args]
         if any(a is None for a in args):
             return None
         return lambda row: fn(*[a(row) for a in args])
@@ -2265,14 +2249,15 @@ def _bool3(v):
     raise Fallback()
 
 
-def compile_direct(stmt: "N.SelectStmt"):
+def compile_direct(stmt: "N.SelectStmt", zone: str):
     """Compile a direct-path statement into
-    ``fn(row) -> dict | None | Fallback-raise``; returns None when the
-    statement shape is outside the subset (joins/analytics/windows/
-    unnest/DISTINCT/ORDER/LIMIT are gated by the caller)."""
+    ``fn(row) -> dict | None | Fallback-raise`` for a session in time
+    zone ``zone``; returns None when the statement shape is outside the
+    subset (joins/analytics/windows/unnest/DISTINCT/ORDER/LIMIT are
+    gated by the caller)."""
     where_f = None
     if stmt.where is not None:
-        where_f = compile_expr(stmt.where)
+        where_f = compile_expr(stmt.where, zone)
         if where_f is None:
             return None
     outs = []  # (name | None-for-star, fn | None)
@@ -2282,7 +2267,7 @@ def compile_direct(stmt: "N.SelectStmt"):
                 return None
             outs.append((None, None))
             continue
-        fn = compile_expr(f.expr)
+        fn = compile_expr(f.expr, zone)
         if fn is None:
             return None
         name = f.alias

@@ -632,6 +632,23 @@ MULTIROW_FUNCS = {"unnest"}
 
 
 # ------------------------------------------------ custom function support
+# process-scoped, as in the reference (functions/registry.go): one table
+# per kind, shared by every StreamSQL instance
+
+class FunctionNameError(ValueError):
+    """A custom function registered under a dialect builtin name, which
+    would change that builtin for every instance in the process."""
+
+
+def _check_custom_name(name: str) -> None:
+    lname = name.lower()
+    if lname in SCALAR_RENDERERS or lname in AGG_RENDERERS \
+            or lname in ANALYTIC_FUNCS or lname in MULTIROW_FUNCS \
+            or lname in WINDOW_CONTEXT_FUNCS:
+        raise FunctionNameError(
+            f"{name!r} is a dialect builtin function; register the "
+            "custom function under another name")
+
 
 _CUSTOM_SCALARS: dict[str, "object"] = {}
 
@@ -646,6 +663,7 @@ def register_function(spark, name: str, fn, return_type="string") -> None:
     """
     from pyspark.sql.types import _parse_datatype_string
 
+    _check_custom_name(name)
     dt = return_type if not isinstance(return_type, str) else _parse_datatype_string(return_type)
     spark.udf.register(name, fn, dt)
     # (fn, declared type): the per-event python path calls the same
@@ -657,6 +675,9 @@ def register_function(spark, name: str, fn, return_type="string") -> None:
 def custom_scalar(name: str):
     """(fn, return_type) for a runtime-registered scalar UDF."""
     return _CUSTOM_SCALARS.get(name.lower())
+
+
+_CUSTOM_AGGS: dict[str, Renderer] = {}
 
 
 def register_aggregate_function(spark, name: str, fn, return_type="double") -> None:
@@ -671,6 +692,7 @@ def register_aggregate_function(spark, name: str, fn, return_type="double") -> N
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import _parse_datatype_string
 
+    _check_custom_name(name)
     dt = return_type if not isinstance(return_type, str) \
         else _parse_datatype_string(return_type)
 
@@ -680,7 +702,7 @@ def register_aggregate_function(spark, name: str, fn, return_type="double") -> N
     agg.__annotations__ = {"values": pd.Series, "return": object}
     udaf = pandas_udf(agg, dt)
     spark.udf.register(name, udaf)
-    AGG_RENDERERS[name.lower()] = _simple(f"{name}({{0}})")
+    _CUSTOM_AGGS[name.lower()] = _simple(f"{name}({{0}})")
 
 
 _CUSTOM_ANALYTICS: dict[str, tuple] = {}
@@ -704,6 +726,7 @@ def register_analytic_function(name: str, state_factory, return_type="double") -
     """
     from pyspark.sql.types import _parse_datatype_string
 
+    _check_custom_name(name)
     dt = return_type if not isinstance(return_type, str) \
         else _parse_datatype_string(return_type)
     _CUSTOM_ANALYTICS[name.lower()] = (state_factory, dt)
@@ -715,7 +738,7 @@ def custom_analytic(name: str):
 
 
 def is_aggregate(name: str) -> bool:
-    return name.lower() in AGG_RENDERERS
+    return name.lower() in AGG_RENDERERS or name.lower() in _CUSTOM_AGGS
 
 
 def is_analytic(name: str) -> bool:
@@ -744,7 +767,7 @@ def _edit_distance(a: str, b: str, cap: int = 3) -> int:
 
 def known_function_names() -> set[str]:
     return (set(SCALAR_RENDERERS) | set(AGG_RENDERERS) | ANALYTIC_FUNCS
-            | MULTIROW_FUNCS | WINDOW_CONTEXT_FUNCS
+            | MULTIROW_FUNCS | WINDOW_CONTEXT_FUNCS | set(_CUSTOM_AGGS)
             | set(_CUSTOM_ANALYTICS) | set(_CUSTOM_SCALARS))
 
 
@@ -804,7 +827,7 @@ def render_scalar(name: str, args: list[str], ast: list[N.Expr]) -> str:
 
 
 def render_aggregate(name: str, args: list[str], ast: list[N.Expr]) -> str:
-    r = AGG_RENDERERS.get(name.lower())
+    r = AGG_RENDERERS.get(name.lower()) or _CUSTOM_AGGS.get(name.lower())
     if r is None:
         raise ValueError(f"unknown aggregate function: {name}")
     try:

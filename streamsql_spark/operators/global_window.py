@@ -37,9 +37,10 @@ class Trigger:
     (aggutil ``acc_*``), and the predicate around them is pyeval's —
     SQL three-valued logic, Spark arithmetic.  :meth:`fired` is the one
     running-aggregate step the batch segmenter and the streaming kernel
-    share."""
+    share.  ``zone`` is the session time zone the statement was planned
+    under (``plan.zone``)."""
 
-    def __init__(self, trig: N.Expr):
+    def __init__(self, trig: N.Expr, zone: str = "UTC"):
         self.aggs: list[tuple[str, str | None]] = []  # (acc kind, column)
 
         def pre(e):
@@ -66,7 +67,7 @@ class Trigger:
         self.pred = compile_strict(
             N.Bin("AND", N.transform(trig, lambda n: n, pre=pre),
                   N.Lit(True)),
-            f"TRIGGER WHEN {sql_text(trig)}")
+            f"TRIGGER WHEN {sql_text(trig)}", zone)
         self.columns = sorted({c for _, c in self.aggs if c is not None})
 
     def new(self) -> list:

@@ -93,6 +93,7 @@ class QueryPlan:
     agg_specs: list[AggSpec] = field(default_factory=list)
     having_sql: str | None = None
     trigger: object = None            # GLOBAL WINDOW: global_window.Trigger
+    zone: str = "UTC"                 # session time zone planned under
     # shared tail
     outputs: list[OutputField] = field(default_factory=list)
     order_by: list[tuple] = field(default_factory=list)  # [(sql, asc)]

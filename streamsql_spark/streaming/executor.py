@@ -293,7 +293,8 @@ class StreamingExecutor:
               sink_path: str | None = None,
               sink_format: str = "parquet",
               sink_row_limit: int = 100_000,
-              on_output: Callable[[int], None] | None = None):
+              on_output: Callable[[int], None] | None = None,
+              progress=None):
         """Wire build() into a writeStream with the reference's sink
         semantics: each emission batch is post-processed then delivered
         to the sink callback as list[dict] (AddSink analog).
@@ -306,11 +307,10 @@ class StreamingExecutor:
         DISTRIBUTED (``foreachBatch`` append to parquet/any format, no
         driver collect), and the callback — if also given — receives at
         most ``sink_row_limit`` rows per batch as a bounded preview of
-        what landed on disk."""
+        what landed on disk.  ``progress`` (the caller's
+        :class:`.progress.ProgressTotals`) gets each batch's progress."""
         import uuid as _uuid
 
-        from .progress import ensure_listener
-        ensure_listener(self.spark)  # incremental GetStats accumulation
         # per-batch source row counts via a named observation — the file
         # source's numInputRows reads 0 under AvailableNow, so GetStats
         # (api/facade.py) folds observedMetrics["streamsql_source_*"] in
@@ -370,7 +370,7 @@ class StreamingExecutor:
         # N starts, so draining ONE lastProgress at the top of every
         # foreachBatch invocation observes every progress entry exactly
         # once regardless of the retention cap (the final batch is
-        # drained by GetStats itself); the session listener remains as
+        # drained by GetStats itself); the owner's listener remains as
         # belt-and-braces and for the native-file-sink path, which has
         # no foreachBatch hook.  lastProgress, NOT recentProgress: the
         # full list is one py4j+JSON fetch of up to 100 entries per
@@ -379,12 +379,11 @@ class StreamingExecutor:
         query_ref: list = []
 
         def _drain_progress() -> None:
-            if query_ref:
-                from .progress import ingest
+            if query_ref and progress is not None:
                 try:
                     p = query_ref[0].lastProgress
                     if p:
-                        ingest(p)
+                        progress.ingest(p)
                 except Exception:
                     pass  # metrics must never break the stream
 

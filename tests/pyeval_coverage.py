@@ -52,7 +52,7 @@ def _label(e) -> str:
 def _miss_nodes(e):
     """Minimal uncompilable subtrees of ``e`` (children first: a Func
     whose arg is the real blocker reports the arg, not itself)."""
-    if e is None or compile_expr(e) is not None:
+    if e is None or compile_expr(e, "UTC") is not None:
         return []
     bad = [m for k in e.children() for m in _miss_nodes(k)]
     return bad or [e]
@@ -160,7 +160,7 @@ def main() -> None:
             error_shaped += 1
             continue
         direct += 1
-        if compile_direct(stmt) is not None:
+        if compile_direct(stmt, "UTC") is not None:
             compiled += 1
             continue
         reasons = {_label(m) for f in stmt.fields

@@ -2656,7 +2656,6 @@ def test_pyeval_time_family_clock_and_tz_gate(spark):
     import datetime
 
     from streamsql_spark.api.facade import _NOT_APPLICABLE, StreamSQL
-    from streamsql_spark.dialect import pyeval
 
     e = StreamSQL(spark)
     e.execute("SELECT now() AS t, current_date() AS d, "
@@ -2671,29 +2670,19 @@ def test_pyeval_time_family_clock_and_tz_gate(spark):
     assert abs((py["t"] - sp["t"]).total_seconds()) < 60
     assert abs(py["u"] - sp["u"]) < 60
 
+    orig = spark.conf.get("spark.sql.session.timeZone")
     try:
-        pyeval.set_session_tz("America/New_York")
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
         e2 = StreamSQL(spark)
         e2.execute("SELECT now() AS t FROM stream")
-        # compile directly: _emit_sync_python would re-read the real
-        # session tz and undo the override.  Non-UTC at COMPILE time
-        # refuses outright (a statement compiled under one facade must
-        # not start answering because another facade later set the
-        # process-wide tz back to UTC)
+        # the zone read at execute() binds the compile: non-UTC
+        # refuses outright, and the Spark path answers
         from streamsql_spark.dialect.pyeval import compile_direct
-        assert compile_direct(e2._stmt) is None
-        # the runtime gate remains as a tripwire for the reverse flip:
-        # compiled under UTC, the tz global then changes
-        pyeval.set_session_tz("UTC")
-        fn = compile_direct(e2._stmt)
-        assert fn is not None
-        pyeval.set_session_tz("America/New_York")
-        import pytest
-        with pytest.raises(pyeval.Fallback):
-            fn({"v": 1})
+        assert e2._zone == "America/New_York"
+        assert compile_direct(e2._stmt, e2._zone) is None
+        assert e2._emit_sync_python({"v": 1}) is _NOT_APPLICABLE
     finally:
-        pyeval.set_session_tz(
-            spark.conf.get("spark.sql.session.timeZone"))
+        spark.conf.set("spark.sql.session.timeZone", orig)
 
 
 def test_pyeval_int64_overflow_falls_back(spark):
@@ -3710,25 +3699,23 @@ def test_greatest_least_nil_propagation_and_chr_range(spark):
 
 
 def test_analytic_pyeval_compile_reads_real_session_tz(spark):
-    """ADVICE r10 (high): the analytic per-event compile must re-read
-    the REAL session timezone before compiling — only the plain direct
-    path (_emit_sync_python) called set_session_tz, so with a non-UTC
-    user session the module global stayed at its stale default and
-    tz-gated functions (hour/date_format/...) silently answered in UTC
-    while the Spark oracle answered in the session zone."""
+    """ADVICE r10 (high): the analytic per-event compile must see the
+    REAL session timezone — when the zone was a module global that only
+    the plain direct path (_emit_sync_python) set, a non-UTC user
+    session kept its stale default and tz-gated functions
+    (hour/date_format/...) silently answered in UTC while the Spark
+    oracle answered in the session zone.  The zone is now read at
+    execute() and passed into every compile."""
     from streamsql_spark.api.facade import StreamSQL
-    from streamsql_spark.dialect import pyeval
 
     orig = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        pyeval.set_session_tz("UTC")  # stale global from a prior facade
         e = StreamSQL(spark)
         e.execute("SELECT hour(ts) AS h, lag(v) AS prev FROM stream")
         cp = e._compile_analytic_python()
-        # the compile saw the real zone: tz-gated hour() refuses, and
-        # the module global now reflects the session
-        assert pyeval._SESSION_TZ == "America/New_York"
+        # the compile saw the real zone: tz-gated hour() refuses
+        assert e._zone == "America/New_York"
         assert cp is None
         # a tz-free analytic statement still compiles under non-UTC
         e2 = StreamSQL(spark)
@@ -3736,7 +3723,6 @@ def test_analytic_pyeval_compile_reads_real_session_tz(spark):
         assert e2._compile_analytic_python() is not None
     finally:
         spark.conf.set("spark.sql.session.timeZone", orig)
-        pyeval.set_session_tz(orig)
 
 
 def test_unaliased_nested_path_names_by_last_segment(spark):

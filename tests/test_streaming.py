@@ -908,15 +908,15 @@ def test_get_stats_exact_when_listener_drops_events(spark, monkeypatch):
 
     from streamsql_spark.streaming import progress as prog
 
-    real_ingest = prog.ingest
+    real_ingest = prog.ProgressTotals.ingest
 
-    def lossy_ingest(p):
+    def lossy_ingest(self, p):
         if isinstance(p.get("id"), str) and not isinstance(
                 p.get("id"), _uuid.UUID):
             return  # simulate the listener bus dropping EVERY event
-        real_ingest(p)
+        real_ingest(self, p)
 
-    monkeypatch.setattr(prog, "ingest", lossy_ingest)
+    monkeypatch.setattr(prog.ProgressTotals, "ingest", lossy_ingest)
     old = spark.conf.get("spark.sql.streaming.numRecentProgressUpdates", "100")
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "2")
     try:
