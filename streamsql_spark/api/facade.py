@@ -176,9 +176,7 @@ class StreamSQL:
         self._metrics = {"input": 0, "input_dropped": 0, "output": 0,
                          "schema_dropped": 0, "stream_out_exact": 0}
         self._queries: list = []  # StreamingQueries started by start_stream
-        # their GetStats totals and listener: from the first
-        # start_stream until stop() (streaming/progress.py)
-        self._progress = None
+        self._progress = None  # their GetStats totals, until stop()
 
     # ------------------------------------------------------------ compile
     def execute(self, sql: str) -> "StreamSQL":
@@ -1153,7 +1151,6 @@ class StreamSQL:
         if self._progress is None:
             from ..streaming.progress import ProgressTotals
             self._progress = ProgressTotals()
-            self.spark.streams.addListener(self._progress)
         sq = ex.start(self._plan, stream_df,
                       sink=(fanout if sinks else None),
                       on_output=(count_out if collect_delivery else None),
@@ -2159,9 +2156,9 @@ class StreamSQL:
         batches; backpressure channels don't exist on Spark (the engine
         paces sources via maxOffsetsPerTrigger), so retry/expand
         counters are structurally 0."""
-        # Totals come from this instance's incremental accumulator (its
-        # listener + this synchronous drain, deduped by (runId, batchId)
-        # high-water mark) — NOT from re-summing recentProgress, which
+        # Totals come from this instance's incremental accumulator (the
+        # per-batch drains, a listener for native-sink queries, and this
+        # synchronous drain, deduped by (runId, batchId) high-water mark) — NOT from re-summing recentProgress, which
         # Spark caps at numRecentProgressUpdates (default 100) entries
         # and would silently undercount long-running streams.  Output:
         # driver-collect deliveries are counted exactly in the batch
@@ -2264,7 +2261,7 @@ class StreamSQL:
         self._table_source_meta.clear()
         self._table_source_route.clear()
         if self._progress is not None:  # release the stream totals
-            self.spark.streams.removeListener(self._progress)
+            self._progress.close()
             self._progress = None
         with self._buffer_cond:  # same lock discipline as the trigger swap
             self._buffer.clear()

@@ -385,8 +385,7 @@ def execute_cep(spark: SparkSession, plan, source_df: DataFrame, executor) -> Da
     drop_null_ts = parts["drop_null_ts"]
     order_cols = parts["order_cols"]
     all_rows = spec.rows_per_match == "all"
-    # compiled once; the closures ship by value
-    program = Program(spec, plan.zone)
+    program = Program(spec, plan.zone)  # compiled once; closures ship by value
 
     names = [f.name for f in out_schema.fields]
 

@@ -641,10 +641,7 @@ class FunctionNameError(ValueError):
 
 
 def _check_custom_name(name: str) -> None:
-    lname = name.lower()
-    if lname in SCALAR_RENDERERS or lname in AGG_RENDERERS \
-            or lname in ANALYTIC_FUNCS or lname in MULTIROW_FUNCS \
-            or lname in WINDOW_CONTEXT_FUNCS:
+    if name.lower() in _builtin_names():
         raise FunctionNameError(
             f"{name!r} is a dialect builtin function; register the "
             "custom function under another name")
@@ -765,10 +762,14 @@ def _edit_distance(a: str, b: str, cap: int = 3) -> int:
     return rows[-1][-1]
 
 
-def known_function_names() -> set[str]:
+def _builtin_names() -> set[str]:
     return (set(SCALAR_RENDERERS) | set(AGG_RENDERERS) | ANALYTIC_FUNCS
-            | MULTIROW_FUNCS | WINDOW_CONTEXT_FUNCS | set(_CUSTOM_AGGS)
-            | set(_CUSTOM_ANALYTICS) | set(_CUSTOM_SCALARS))
+            | MULTIROW_FUNCS | WINDOW_CONTEXT_FUNCS)
+
+
+def known_function_names() -> set[str]:
+    return (_builtin_names() | set(_CUSTOM_AGGS) | set(_CUSTOM_ANALYTICS)
+            | set(_CUSTOM_SCALARS))
 
 
 # per-row OVER window functions with no home in the aggregation model:

@@ -359,6 +359,8 @@ class StreamingExecutor:
                       .option("checkpointLocation", checkpoint)
                       .queryName(query_name).outputMode("append"))
             writer = writer.trigger(**(trigger or {"availableNow": True}))
+            if progress is not None:
+                progress.listen(self.spark)  # no foreachBatch drain here
             return writer.start()
         post = self.post_batch_fn(plan)
 
@@ -370,9 +372,9 @@ class StreamingExecutor:
         # N starts, so draining ONE lastProgress at the top of every
         # foreachBatch invocation observes every progress entry exactly
         # once regardless of the retention cap (the final batch is
-        # drained by GetStats itself); the owner's listener remains as
-        # belt-and-braces and for the native-file-sink path, which has
-        # no foreachBatch hook.  lastProgress, NOT recentProgress: the
+        # drained by GetStats itself); a listener is needed only on the
+        # native-file-sink path, which has no foreachBatch hook.
+        # lastProgress, NOT recentProgress: the
         # full list is one py4j+JSON fetch of up to 100 entries per
         # trigger — O(batches²) marshalling that measurably slowed
         # multi-trigger replays (r13 bench: streaming_cep_replay +40%).

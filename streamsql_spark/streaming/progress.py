@@ -11,8 +11,11 @@ drains (one ``lastProgress`` per foreachBatch, ``recentProgress`` at
 GetStats — listener callbacks are async) feed the same accumulator,
 deduplicated by (runId, batchId) high-water mark, so nothing is counted
 twice and nothing is lost when more than 100 micro-batches elapse
-between calls.  The owning ``StreamSQL`` adds the listener at its first
-``start_stream`` and removes it in ``stop()``.
+between calls.  The drains alone are exact for foreachBatch queries, so
+the listener is added only for a query without that hook (the native
+file sink): every listener converts every progress event of the session
+through py4j on the driver.  The owning ``StreamSQL`` creates the
+totals at its first ``start_stream`` and closes them in ``stop()``.
 """
 
 from __future__ import annotations
@@ -32,6 +35,19 @@ class ProgressTotals(StreamingQueryListener):
         self._lock = threading.Lock()
         # query id -> {"in": total, "out": total, "hwm": {runId: batchId}}
         self._totals: dict[str, dict] = {}
+        self._streams = None  # the StreamingQueryManager listened to
+
+    def listen(self, spark) -> None:
+        """Add this listener to ``spark``'s streams (once)."""
+        if self._streams is None:
+            self._streams = spark.streams
+            self._streams.addListener(self)
+
+    def close(self) -> None:
+        """Remove the listener, if added."""
+        if self._streams is not None:
+            self._streams.removeListener(self)
+            self._streams = None
 
     def watch(self, query_id) -> None:
         with self._lock:
@@ -80,9 +96,6 @@ class ProgressTotals(StreamingQueryListener):
                 self.ingest(json.loads(event.progress.json))
         except Exception:
             pass  # metrics must never break the stream
-
-    def onQueryIdle(self, event):
-        pass
 
     def onQueryTerminated(self, event):
         pass

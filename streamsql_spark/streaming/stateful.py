@@ -1383,8 +1383,7 @@ def cep_stream(spark, plan, df: DataFrame):
             "(MAXNAVOFFSET='<max rows any runtime offset can reach>') "
             "— a runtime offset beyond the cap then fails typed — or "
             "run this statement on the batch path")
-    # compiled once; ships by value
-    program = Program(spec, plan.zone, nav_cap)
+    program = Program(spec, plan.zone, nav_cap)  # compiled once; ships by value
 
     # typed cleaners: the buffered row dicts feed DEFINE/MEASURES
     # evaluation, so an int column must not arrive as 5 from one

@@ -119,7 +119,9 @@ def test_utc_instance_stays_in_process_after_non_utc_emit_sync(spark, ny):
     assert u._emit_sync_python(dict(ROW)) == {"t": UTC_EPOCH}
 
 
-def _run_counted_stream(spark, n_rows: int):
+def _run_counted_stream(spark, n_rows: int, sink_path=None):
+    """One instance, one stream of ``n_rows`` rows: a callback sink
+    (foreachBatch) or, with ``sink_path``, the native file sink."""
     from pyspark.sql.types import DoubleType, StringType, StructField, \
         StructType
 
@@ -131,8 +133,10 @@ def _run_counted_stream(spark, n_rows: int):
     try:
         replay.add_batch([{"k": f"k{i}", "v": 1.0 + i}
                           for i in range(n_rows)])
-        q = s.start_stream(replay.stream(), sink=lambda rows: None,
-                           checkpoint=replay.checkpoint)
+        sink = {"sink_path": sink_path} if sink_path \
+            else {"sink": lambda rows: None}
+        q = s.start_stream(replay.stream(), checkpoint=replay.checkpoint,
+                           **sink)
         assert q.awaitTermination(120)
         deadline = time.time() + 30
         while s.get_stats()["input_count"] < n_rows \
@@ -148,22 +152,27 @@ def _listener_registered(spark, listener) -> bool:
                for j in spark.streams._jsqm.listListeners())
 
 
-def test_stop_releases_listener_and_totals(spark):
-    s1 = _run_counted_stream(spark, 3)
+def test_stop_releases_listener_and_totals(spark, tmp_path):
+    """Each instance owns its totals; only a query without a
+    foreachBatch drain (the native file sink) needs a listener, and
+    stop() removes it and releases the totals without touching another
+    instance's."""
+    s1 = _run_counted_stream(spark, 3, sink_path=str(tmp_path / "out"))
     s2 = _run_counted_stream(spark, 5)
     assert s1.get_stats()["input_count"] == 3
+    assert s1.get_stats()["output_count"] == 3
     assert s2.get_stats()["input_count"] == 5
-    l1, l2 = s1._progress, s2._progress
-    assert _listener_registered(spark, l1)
+    p1, p2 = s1._progress, s2._progress
+    assert _listener_registered(spark, p1)
+    assert not _listener_registered(spark, p2)
     s1.stop()
-    assert not _listener_registered(spark, l1)
+    assert not _listener_registered(spark, p1)
     assert s1._progress is None
     assert s1.get_stats()["input_count"] == 0
-    assert _listener_registered(spark, l2)
     assert s2.get_stats()["input_count"] == 5
     assert s2.get_stats()["output_count"] == 5
     s2.stop()
-    assert not _listener_registered(spark, l2)
+    assert s2._progress is None
 
 
 def test_replay_caches_follow_rewritten_events_input(spark, tmp_path):
